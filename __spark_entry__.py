@@ -2307,7 +2307,7 @@ def oracle_sql() -> dict[str, str]:
     )
     sig_expr = _sql_minhash_sig()
     # sig[1] IS NULL ⇔ the doc has no shingles (short doc) — filtered out
-    # before banding, mirroring _lsh_banded's NULL-signature filter
+    # before banding, mirroring dedup._minhash_bands (no signature row, no bucket)
     band_bucket = (
         "SELECT doc_id, band, "
         "sig[band * 2 + 1]::VARCHAR || ':' || sig[band * 2 + 2]::VARCHAR AS bucket "

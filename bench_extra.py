@@ -78,22 +78,10 @@ def stage_probes(spark, sf_dir):
         return E._with_dups(E._docs(spark, sf_dir))
 
     probes["mh_sig_only"] = lambda: dedup.minhash_signatures(wd(), "text", "doc_id", 8, 2)
-    probes["mh_banded_only"] = lambda: dedup._lsh_banded(wd(), "text", "doc_id", 8, 4, 2)
-
-    def mh_pairs_nodistinct():
-        banded = dedup._lsh_banded(wd(), "text", "doc_id", 8, 4, 2)
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        banded = banded.repartition(n_part, "band", "bucket")
-        a = banded.alias("a")
-        b = banded.hint("shuffle_hash").alias("b")
-        return a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.k") < F.col("b.k")),
-        ).select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
-
-    probes["mh_pairs_nodistinct"] = mh_pairs_nodistinct
+    probes["mh_banded_only"] = lambda: dedup._minhash_bands(wd(), "text", "doc_id", 8, 4, 2)
+    probes["mh_pairs_nodistinct"] = lambda: dedup._bucket_pairs(
+        dedup._cobucket(dedup._minhash_bands(wd(), "text", "doc_id", 8, 4, 2)), distinct=False
+    )
 
     # --- scan floors -------------------------------------------------
     li = lambda: spark.read.parquet(f"{sf_dir}/lineitem.parquet")  # noqa: E731

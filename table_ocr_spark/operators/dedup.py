@@ -21,9 +21,18 @@ Four tiers, all Spark built-in expressions (JVM-side; no Python UDFs):
   small Hamming distance.
 * **n-gram Jaccard**: exact set similarity for candidate verification.
 
+Every LSH candidate form — MinHash all-pairs, star and against-index
+here, SimHash below, sign-LSH in operators/similarity.py — runs on one
+banded-bucket core: per-band bucket columns → ``_band_explode`` →
+``_cobucket`` (explicit-width repartition + optional hot-bucket cap) →
+a pair emitter (``_bucket_pairs`` self-pairs, ``_pairs_against`` against
+an index, or the star pivot window).  A form only chooses how a bucket
+is computed and which pairs a bucket emits; each design reason lives
+once, in the helper's docstring.
+
 Scale notes (100 TB): exact dedup is one shuffle on the fingerprint
 (map-side partial agg applies).  MinHash signatures are a projection;
-LSH banding explodes ×bands (bounded), buckets then group — the classic
+banding explodes ×bands (bounded), buckets then co-locate — the classic
 shuffle-join-on-band-hash; the final verify joins only candidate pairs.
 Broadcast nothing here: both sides are big.  AQE rebalances bucket skew
 but cannot bound the O(n²) PAIR COUNT of a hot bucket — that is what
@@ -38,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from table_ocr_spark.operators.textstats import fingerprint_col, hash60_col
+from table_ocr_spark.operators.textstats import fingerprint_col, hash60_col, words_col
 
 
 # ------------------------------------------------------------- exact ------
@@ -80,7 +89,7 @@ def word_shingles_col(text: str = "text", n: int = 2) -> Column:
     20k-token row ground for minutes.  As a lambda variable the split
     evaluates once per row and every window reads the materialized
     array (values are unchanged; windows are array_join(slice(...)))."""
-    toks = F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    toks = words_col(text)
     if n == 1:
         return F.array_distinct(toks)
 
@@ -145,7 +154,7 @@ def shingle_hashes_col(text: str = "text", n: int = 2) -> Column:
     plain subtree per reference, so an unbound ``th`` would re-hash every
     token once per window.  Docs with fewer than n tokens short-circuit
     to an empty array (``sequence(1, 0)`` DESCENDS; it must never run)."""
-    toks = F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    toks = words_col(text)
     if n == 1:
         return F.transform(toks, _hash32)
 
@@ -260,39 +269,130 @@ def minhash_signatures(
     )
 
 
-def _lsh_banded(
+# ------------------------------------------------- banded-bucket core -----
+def _band_explode(df: DataFrame, buckets: list, *payload: str) -> DataFrame:
+    """(k, *payload, band, bucket) rows — one per row of ``df`` × band.
+    ``df`` carries the key as ``k``; ``buckets`` holds one bucket Column
+    per band (the strategy: MinHash band string, SimHash bit slice, sign
+    bits of a hyperplane family)."""
+    bb = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
+                for b, bucket in enumerate(buckets)
+            ]
+        )
+    ).alias("bb")
+    return df.select("k", *payload, bb).select("k", *payload, "bb.band", "bb.bucket")
+
+
+def _cobucket(banded: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
+    """Co-locate each (band, bucket) in one task, optionally dropping
+    buckets of more than ``max_bucket_size`` rows.
+
+    The repartition has an EXPLICIT width, ``spark.sql.shuffle.partitions``:
+    AQE coalesces shuffle reads by BYTES, and banded rows are tiny (key +
+    two small columns) while the pair stage above them emits O(bucket²)
+    rows — bytes wildly underestimate its compute density, and AQE was
+    observed to fold a whole pairing onto 3 tasks (22 s CPU on 3.6 MB,
+    no scaling past ~4 cores).  An explicit count is exempt from
+    coalescing, inherits cluster sizing from the session, and is the one
+    exchange both sides of a self-join reuse, so the bucket projection
+    below it (signatures, simhashes, hyperplane dots) computes once.
+
+    The cap bounds the pair blowup of hot buckets: a bucket of n docs
+    emits O(n²) self-pairs, and near-identical boilerplate makes
+    million-row buckets at 100 TB — AQE can rebalance a join but not
+    bound its pair COUNT.  It is a WINDOW count on this same exchange:
+    the window co-locates each bucket, which the repartition does anyway,
+    so a hot bucket's rows move once and are dropped before any pairing.
+    A count aggregate + broadcast anti-join would recompute the whole
+    subtree under the exchange (a broadcast side never reuses it).  The
+    dropped buckets are auditable through ``lsh_oversized_buckets``."""
+    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    out = banded.repartition(n_part, "band", "bucket")
+    if max_bucket_size is None:
+        return out
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    return out.withColumn("_bsz", size).filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
+
+
+def _bucket_pairs(banded: DataFrame, *extra: Column, distinct: bool = True) -> DataFrame:
+    """Within-bucket self-pairs of a ``_cobucket`` frame: (key_a, key_b,
+    *extra) with key_a < key_b, distinct (``distinct=False`` leaves the
+    raw join for stage probes).  ``extra`` columns read the two sides as
+    ``a.<col>`` / ``b.<col>``.
+
+    The ``shuffle_hash`` hint: at small data AQE turns the self-join into
+    a broadcast join, and a broadcast side recomputes the subtree instead
+    of reusing the exchange — the hint keeps both sides on the one
+    repartition (plan-guarded: a single signature pass).  At scale the
+    banded frame exceeds any broadcast threshold and this is the join AQE
+    would pick anyway."""
+    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
+    out = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.k") < F.col("b.k")),
+    ).select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"), *extra)
+    return out.distinct() if distinct else out
+
+
+def _pairs_against(
+    new_banded: DataFrame,
+    old_banded: DataFrame,
+    max_bucket_size: int | None = None,
+    max_candidates_per_bucket: int | None = None,
+) -> DataFrame:
+    """(key_new, key_old) distinct: each new row × each index row sharing
+    a (band, bucket).
+
+    The cap is sided: each side drops only its OWN oversized buckets,
+    which is pair-equivalent to dropping from both — the pair count is
+    n_new × n_old, and zeroing either side zeroes the bucket's pairs.
+    ``max_candidates_per_bucket`` truncates the INDEX side of each bucket
+    to its C lowest keys (deterministic window rank) — the star-form
+    analog for the cross join: per-bucket pairs drop from n_new × n_old
+    to n_new × C while each new row still meets C history
+    representatives per colliding band."""
+    new = _cobucket(new_banded, max_bucket_size)
+    old = _cobucket(old_banded, max_bucket_size)
+    if max_candidates_per_bucket is not None:
+        rank = F.row_number().over(Window.partitionBy("band", "bucket").orderBy("k"))
+        old = (
+            old.withColumn("_rn", rank)
+            .filter(F.col("_rn") <= max_candidates_per_bucket)
+            .drop("_rn")
+        )
+    a, b = new.alias("a"), old.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")))
+        .select(F.col("a.k").alias("key_new"), F.col("b.k").alias("key_old"))
+        .distinct()
+    )
+
+
+# --------------------------------------------------------- MinHash LSH ----
+def _minhash_bands(
     df: DataFrame, text: str, key: str, k: int, bands: int, shingle_n: int
 ) -> DataFrame:
-    """(key, band, bucket) rows — one per doc × band.
-
-    Built on ``minhash_signatures``: the signature aggregation's own
-    hash(k) exchange is the reuse point — both sides of the downstream
-    bucket self-join share one identical subplan, so ReuseExchange
-    computes the signatures ONCE (observed 35 s → ~2 s at sf0.01 when
-    this reuse was first introduced; the banding below is a plain
-    projection that AQE keeps above the reused exchange)."""
-    rows_per_band = k // bands
+    """(k, band, bucket) rows: band b's bucket is the ``k // bands``
+    signature values of that band joined with ':'.  Docs without
+    shingles have no signature row, so they never share a bucket."""
+    r = k // bands
     sig = minhash_signatures(df, text, key, k, shingle_n)
-    return sig.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"m{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "bb.band", "bb.bucket")
+    return _band_explode(
+        sig,
+        [
+            F.concat_ws(":", *[F.col(f"m{b * r + i}").cast("string") for i in range(r)])
+            for b in range(bands)
+        ],
+    )
+
+
+def _index_bands(index: DataFrame, key: str) -> DataFrame:
+    return index.select(F.col(key).alias("k"), "band", "bucket")
 
 
 def minhash_lsh_pairs(
@@ -306,64 +406,15 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs: equal MinHash band in ≥1 of ``bands`` bands.
 
-    signature[k] → bands of k/bands values → explode → groupBy band bucket →
+    signature[k] → bands of k/bands values → explode → co-bucket →
     self-join inside buckets (key_a < key_b), distinct pairs.
 
-    ``max_bucket_size`` bounds the within-bucket self-join: a bucket of n
-    docs emits O(n²) pairs, and at 100 TB near-identical boilerplate makes
-    million-row buckets — AQE rebalances the join but cannot bound the pair
-    COUNT.  Buckets above the cap are dropped from pairing (every member
-    still pairs through its other bands unless those are oversized too);
-    ``lsh_oversized_buckets`` returns the dropped buckets for a quarantine
-    sink so the drop is observable, not silent.
-
-    The cap is a map-side-combined ``groupBy(band, bucket).count()`` whose
-    oversized survivors broadcast back as a left_anti join — NOT a
-    count-window over (band, bucket): the window would co-locate each
-    bucket in one task, making the pathological bucket the cap exists for
-    into a shuffle straggler (its rows all move before being dropped).
-    Oversized buckets are few by construction (each holds > cap rows, so
-    at most total/cap exist) — safely broadcastable.
-    """
-    banded = _lsh_banded(df, text, key, k, bands, shingle_n)
-    # Explicit-width co-partitioning for the pair stage.  AQE coalesces
-    # shuffle reads by BYTES, and banded rows are tiny (key + 2 small
-    # cols) while the within-bucket join emits O(bucket²) pairs — bytes
-    # wildly underestimate compute density, and AQE was observed to fold
-    # the entire pairing onto 3 tasks (22 s CPU on 3.6 MB → zero scaling
-    # past ~4 cores).  repartition with an EXPLICIT count is exempt from
-    # AQE coalescing, keeps both join sides on one reused exchange, and
-    # inherits cluster sizing from spark.sql.shuffle.partitions.
-    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    banded = banded.repartition(n_part, "band", "bucket")
-    if max_bucket_size is not None:
-        # cap via a WINDOW count on the exchange already there — the
-        # former count-aggregate + broadcast anti-join recomputed the
-        # whole shingle→signature subtree (a broadcast side never reuses
-        # the repartition exchange).  The window co-locates each bucket
-        # in one task, which is exactly what the repartition above does
-        # anyway; the pathological bucket's rows move once and are
-        # dropped before any pairing.
-        banded = (
-            banded.withColumn(
-                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-            )
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-    # shuffle_hash hint: at small data AQE turns the self-join into a
-    # broadcast join, and the broadcast side recomputes the signature
-    # subtree instead of reusing the exchange — the hint keeps both
-    # sides on the ONE repartition (plan-guarded: a single signature
-    # pass).  At scale the banded frame exceeds any broadcast threshold
-    # and this is the join AQE would pick anyway.
-    a = banded.alias("a")
-    b = banded.hint("shuffle_hash").alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.k") < F.col("b.k")))
-        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
-        .distinct()
-    )
+    ``max_bucket_size`` drops buckets above the cap from pairing (every
+    member still pairs through its other bands unless those are
+    oversized too); ``lsh_oversized_buckets`` returns the dropped
+    buckets for a quarantine sink, so the drop is observable."""
+    banded = _minhash_bands(df, text, key, k, bands, shingle_n)
+    return _bucket_pairs(_cobucket(banded, max_bucket_size))
 
 
 def minhash_lsh_star_pairs(
@@ -401,30 +452,19 @@ def minhash_lsh_star_pairs(
     to meet in.  All-pairs (``minhash_lsh_pairs``) remains the exact
     small-scale path.
 
+    The pivot is a WINDOW over the co-bucketed exchange, not an
+    aggregate + join-back: AQE broadcasts the tiny pivot frame, and a
+    broadcast side never reuses the exchange, so the join form computed
+    the shingle→signature subtree twice (plan-guarded in
+    tests/test_plans.py).
+
     Output: (key_a, key_b) distinct with key_a < key_b (normalized with
     least/greatest — under a non-empty ``pivot_salt`` the salted-argmin
     pivot is not the key min, so the raw edge can come out reversed;
     column contract identical to ``minhash_lsh_pairs``, so verify/CC/
     representative stages and any ordering-sensitive oracle compose
     unchanged)."""
-    banded = _lsh_banded(df, text, key, k, bands, shingle_n)
-    if max_bucket_size is not None:
-        oversized = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
-    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    banded = banded.repartition(n_part, "band", "bucket")
-    # pivot = bucket min (or salted argmin) via a WINDOW over the same
-    # (band, bucket) partitioning — NOT an aggregate + join-back: the
-    # tiny pivot frame gets broadcast by AQE, and a broadcast side never
-    # reuses the repartition exchange, so the join form recomputed the
-    # ENTIRE shingle→signature subtree a second time (plan-guarded in
-    # tests/test_plans.py).  The window runs on the one exchange already
-    # there; per-task bucket size is bounded by max_bucket_size.
+    banded = _cobucket(_minhash_bands(df, text, key, k, bands, shingle_n), max_bucket_size)
     w = Window.partitionBy("band", "bucket")
     if pivot_salt:
         order = F.md5(F.concat(F.lit(pivot_salt), F.col("k").cast("string")))
@@ -457,7 +497,7 @@ def lsh_banded(
     near-dup candidates against the WHOLE history by one equi-join on
     (band, bucket) instead of re-banding 100 TB of text per run (see
     ``lsh_pairs_against`` and jobs/curate.py --incremental)."""
-    return _lsh_banded(df, text, key, k, bands, shingle_n).select(
+    return _minhash_bands(df, text, key, k, bands, shingle_n).select(
         F.col("k").alias(key), "band", "bucket"
     )
 
@@ -478,59 +518,16 @@ def lsh_pairs_against(
     half of MinHash LSH — only the increment's text is shingled and
     hashed; history participates as its tiny pre-banded index rows.
 
-    ``max_candidates_per_bucket`` truncates the INDEX side of each
-    bucket to its C lowest keys before pairing (deterministic window
-    rank) — the star-form analog for the cross join: per-bucket pair
-    count drops from n_new × n_old to n_new × C, bounding the templated
-    hot-bucket blowup while each new doc still verifies against C
-    history representatives per colliding band.
-
     Output: (key_new, key_old) distinct — one row per new doc ×
     colliding indexed doc.  Asymmetric by design: new×new pairing is the
     ordinary ``minhash_lsh_pairs`` over the increment, run separately.
-
-    ``max_bucket_size`` caps the per-bucket pair blowup exactly like the
-    self-join form, but sided: a bucket is dropped when EITHER side holds
-    more than the cap (the pair count is n_new × n_old, so either side
-    being pathological is enough; both count aggregates are map-side
-    combined and the few oversized buckets broadcast as anti-joins).
-
-    Scale shape: both sides repartition by (band, bucket) at the explicit
-    shuffle width — the same AQE-coalescing exemption as
-    ``minhash_lsh_pairs`` (bytes wildly underestimate the pair stage's
-    compute density; see that docstring)."""
-    n_part = int(new_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    new_banded = _lsh_banded(new_df, text, key, k, bands, shingle_n).repartition(
-        n_part, "band", "bucket"
-    )
-    old_banded = index.select(F.col(key).alias("k"), "band", "bucket").repartition(
-        n_part, "band", "bucket"
-    )
-    if max_bucket_size is not None:
-        # sided cap as WINDOW counts on the exchanges already there (the
-        # former per-side broadcast anti-joins re-derived each side's
-        # subtree — incl. the increment's signature computation).  Each
-        # side drops only its OWN oversized buckets, which is
-        # pair-equivalent to dropping from both: a pair needs a row from
-        # each side, so zeroing either side zeroes the bucket's pairs.
-        w = Window.partitionBy("band", "bucket")
-        new_banded = new_banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-        old_banded = old_banded.withColumn("_bo", F.count(F.lit(1)).over(w))
-        new_banded = new_banded.filter(F.col("_bn") <= max_bucket_size).drop("_bn")
-        old_banded = old_banded.filter(F.col("_bo") <= max_bucket_size).drop("_bo")
-    if max_candidates_per_bucket is not None:
-        w = Window.partitionBy("band", "bucket").orderBy("k")
-        old_banded = (
-            old_banded.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_candidates_per_bucket)
-            .drop("_rn")
-        )
-    a = new_banded.alias("a")
-    b = old_banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")))
-        .select(F.col("a.k").alias("key_new"), F.col("b.k").alias("key_old"))
-        .distinct()
+    ``max_bucket_size`` (sided) and ``max_candidates_per_bucket``
+    (index-side truncation) bound hot buckets; see ``_pairs_against``."""
+    return _pairs_against(
+        _minhash_bands(new_df, text, key, k, bands, shingle_n),
+        _index_bands(index, key),
+        max_bucket_size,
+        max_candidates_per_bucket,
     )
 
 
@@ -546,9 +543,9 @@ def lsh_oversized_buckets(
     """The quarantine view: (band, bucket, bucket_size) of buckets the
     capped pairing dropped — write it next to the pairs output so scale
     runs can audit what was skipped (no silent truncation)."""
-    banded = _lsh_banded(df, text, key, k, bands, shingle_n)
     return (
-        banded.groupBy("band", "bucket")
+        _minhash_bands(df, text, key, k, bands, shingle_n)
+        .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket_size)
     )
@@ -564,7 +561,7 @@ def simhash_col(text: str = "text", bits: int = 16) -> Column:
     re-executed for the size check AND inside each of the ``bits``
     filter passes — ~(bits+1)× the split+md5 work per row in interpreted
     higher-order functions.  As a lambda variable it evaluates once."""
-    toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text))), r"\s+"))
+    toks = F.array_distinct(words_col(text))
 
     def _sim(hashes: Column) -> Column:
         n = F.size(hashes)
@@ -605,70 +602,20 @@ def simhash_near_dup_pairs(
     if max_hamming >= bands:
         raise ValueError("pigeonhole requires max_hamming < bands")
     bpb = bits // bands
-    mask = (1 << bpb) - 1
+    mask = F.lit((1 << bpb) - 1).cast("long")
     sim = df.select(F.col(key).alias("k"), simhash_col(text, bits).alias("sh"))
-    banded = sim.select(
-        "k",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sh"), b * bpb)
-                        .bitwiseAND(F.lit(mask).cast("long"))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "sh", "bb.band", "bb.bucket")
-    # explicit-width co-partitioning on the JOIN keys: one exchange both
-    # self-join sides reuse (the simhash projection computes once), the
-    # join needs no further shuffle, and — because the width is
-    # user-specified — AQE cannot byte-coalesce the O(bucket²) pair
-    # stage onto a handful of tasks (see minhash_lsh_pairs above).
-    banded = banded.repartition(
-        int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "band",
-        "bucket",
+    banded = _band_explode(
+        sim, [F.shiftright("sh", b * bpb).bitwiseAND(mask) for b in range(bands)], "sh"
     )
-    # shuffle_hash: keep small inputs off the broadcast path, which would
-    # recompute the simhash projection instead of reusing the exchange
-    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
-    ham = hamming_col(F.col("a.sh"), F.col("b.sh"), bits)
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .select(
-            F.col("a.k").alias("key_a"),
-            F.col("b.k").alias("key_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    ham = hamming_col(F.col("a.sh"), F.col("b.sh"), bits).alias("hamming")
+    return _bucket_pairs(_cobucket(banded), ham).filter(F.col("hamming") <= max_hamming)
 
 
 def hamming_col(a: Column, b: Column, bits: int) -> Column:
     """Hamming distance between two ``bits``-wide simhashes: popcount of
-    XOR.  (shiftright takes a Python int literal, hence the unrolled sum —
-    ``bits`` flat terms, linear tree.)"""
-    x = a.bitwiseXOR(b)
-    terms = [F.shiftright(x, i).bitwiseAND(F.lit(1).cast("long")) for i in range(bits)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out.cast("int")
-
-
-def hamming16_col(a: Column, b: Column) -> Column:
-    return hamming_col(a, b, 16)
+    XOR — ``bit_count``, the DuckDB oracle's form too (both inputs are
+    non-negative and below 2^``bits``, so the 64-bit count is exact)."""
+    return F.bit_count(a.bitwiseXOR(b))
 
 
 def verify_pairs_jaccard(
@@ -840,8 +787,8 @@ def dedup_near_representatives(
 def jaccard_words_col(a: Column, b: Column) -> Column:
     """Word-set Jaccard between two text columns (distinct whitespace
     tokens). Exact rational arithmetic until the final divide."""
-    sa = F.array_distinct(F.split(F.trim(F.lower(a)), r"\s+"))
-    sb = F.array_distinct(F.split(F.trim(F.lower(b)), r"\s+"))
+    sa = F.array_distinct(words_col(a))
+    sb = F.array_distinct(words_col(b))
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = F.size(F.array_union(sa, sb)).cast("double")
     return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)

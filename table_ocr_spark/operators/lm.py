@@ -46,17 +46,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_ocr_spark.operators.textstats import words_col
+
 _BG_SCHEMA = "array<struct<wp:string,w:string>>"
-
-
-def tokens_col(text: str = "text") -> Column:
-    """The engine's standard word tokenization (lower + \\s+ split)."""
-    return F.split(F.trim(F.lower(F.col(text))), r"\s+")
 
 
 def bigram_pairs_col(text: str = "text") -> Column:
     """array<struct<wp,w>> of adjacent token pairs (empty for <2 tokens)."""
-    toks = tokens_col(text)
+    toks = words_col(text)
 
     def _pairs(tk: Column) -> Column:
         idx = F.sequence(F.lit(1), F.size(tk) - 1)
@@ -101,7 +98,7 @@ def ngram_lm_score(
 
     # unigram counts from the SAME tokenization (derive from pairs plus
     # the final token of each doc so totals equal plain token counts)
-    toks = df.select(F.explode(tokens_col(text)).alias("w"))
+    toks = df.select(F.explode(words_col(text)).alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("_cu"))
     total = uni.agg(F.sum("_cu").alias("_T"))
 

@@ -24,6 +24,15 @@ from typing import List, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_ocr_spark.operators.dedup import (
+    _band_explode,
+    _bucket_pairs,
+    _cobucket,
+    _index_bands,
+    _pairs_against,
+    hamming_col,
+)
+
 
 def dot_col(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -108,8 +117,6 @@ def cosine_topk_lsh(
     ``max_hamming`` bits of the query's bucket, then exact rerank.
     Recall < 1.0 by design — the scale path; the brute-force operator is
     the ground truth it is tested against."""
-    import hashlib  # noqa: F401  (hyperplane uses it)
-
     dim = len(query)
     qbits = 0
     for p in range(planes):
@@ -117,11 +124,7 @@ def cosine_topk_lsh(
         if sum(q * h for q, h in zip(query, hp)) > 0:
             qbits |= 1 << p
     bucketed = df.withColumn("_bkt", lsh_bucket_col(F.col(vec), dim, planes))
-    x = F.col("_bkt").bitwiseXOR(F.lit(qbits))
-    pop = sum(
-        (F.shiftright(x, p).bitwiseAND(F.lit(1))) for p in range(planes)
-    )
-    cand = bucketed.filter(pop <= max_hamming)
+    cand = bucketed.filter(hamming_col(F.col("_bkt"), F.lit(qbits), planes) <= max_hamming)
     return cosine_topk(cand, query, k=k, vec=vec, key=key)
 
 
@@ -302,6 +305,20 @@ def ivf_topk_indexed(
     return cosine_topk(cand, query, k=k, vec=vec, key=key, keep=("_list",))
 
 
+def _sign_bands(
+    df: DataFrame, dim: int, vec: str, key: str, planes_per_band: int, bands: int, *payload: str
+) -> DataFrame:
+    """(k, *payload, band, bucket) rows: band b's bucket is the
+    ``planes_per_band``-bit sign bucket of its own hyperplane family; the
+    vector is available to ``payload`` as ``v``."""
+    base = df.select(F.col(key).alias("k"), F.col(vec).alias("v"))
+    return _band_explode(
+        base,
+        [lsh_bucket_col(F.col("v"), dim, planes_per_band, b * planes_per_band) for b in range(bands)],
+        *payload,
+    )
+
+
 def embedding_near_dup_lsh(
     df: DataFrame,
     dim: int,
@@ -317,68 +334,18 @@ def embedding_near_dup_lsh(
     Each band is an independent ``planes_per_band``-bit sign bucket (its
     own hyperplane family); a pair becomes a candidate when ≥1 band
     matches exactly — the MinHash-banding shape on the random-hyperplane
-    sketch.  Expected candidates for unrelated vectors shrink by
+    sketch, on the same banded-bucket core (operators/dedup.py).
+    Expected candidates for unrelated vectors shrink by
     ~2^-planes_per_band per band, so the exact cosine runs on a tiny set
-    instead of the O(n²) cross join.  The explicit-width repartition on
-    the join keys makes ReuseExchange compute the bucket projection once
-    for both self-join sides AND pins the pair stage's task count
-    against AQE byte-coalescing.  Output: (key_a, key_b, cos_sim
-    rounded to 4dp) with
-    cos_sim ≥ threshold (compared on the ROUNDED value, so the decision
-    is engine-portable)."""
-    sig = df.select(
-        F.col(key).alias("k"),
-        F.col(vec).alias("v"),
-        *[
-            lsh_bucket_col(F.col(vec), dim, planes_per_band, b * planes_per_band).alias(
-                f"bkt{b}"
-            )
-            for b in range(bands)
-        ],
-    )
-    banded = sig.select(
-        "k",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"bkt{b}").alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "v", "bb.band", "bb.bucket")
-    # explicit-width co-partitioning on the JOIN keys: the hyperplane
-    # projection computes once under a single reused exchange, and the
-    # user-specified width keeps AQE from byte-coalescing the
-    # O(bucket²) pair stage onto a few tasks (the banded rows are tiny
-    # in bytes but explode quadratically in compute — see
-    # dedup.minhash_lsh_pairs / BENCH/MINHASH_SCALING.md).
-    banded = banded.repartition(
-        int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "band",
-        "bucket",
-    )
-    # shuffle_hash: keep small inputs off the broadcast path, which would
-    # recompute the hyperplane projection instead of reusing the exchange
-    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
+    instead of the O(n²) cross join.  Output: (key_a, key_b, cos_sim
+    rounded to 4dp) with cos_sim ≥ threshold (compared on the ROUNDED
+    value, so the decision is engine-portable)."""
+    banded = _sign_bands(df, dim, vec, key, planes_per_band, bands, "v")
     cos = cosine_col(
         F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>")
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .select(
-            F.col("a.k").alias("key_a"),
-            F.col("b.k").alias("key_b"),
-            F.round(cos, 4).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
+    return _bucket_pairs(_cobucket(banded), F.round(cos, 4).alias("cos_sim")).filter(
+        F.col("cos_sim") >= threshold
     )
 
 
@@ -397,26 +364,9 @@ def embedding_lsh_index(
     candidates against the WHOLE history with one (band, bucket)
     equi-join instead of re-projecting every stored vector
     (``embedding_pairs_against``)."""
-    sig = df.select(
-        F.col(key),
-        *[
-            lsh_bucket_col(F.col(vec), dim, planes_per_band, b * planes_per_band).alias(
-                f"bkt{b}"
-            )
-            for b in range(bands)
-        ],
+    return _sign_bands(df, dim, vec, key, planes_per_band, bands).select(
+        F.col("k").alias(key), "band", "bucket"
     )
-    return sig.select(
-        key,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"bkt{b}").alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(key, "bb.band", "bb.bucket")
 
 
 def embedding_pairs_against(
@@ -439,27 +389,13 @@ def embedding_pairs_against(
     ``old_vecs`` (the history table, column-pruned to (key, vec)) ONLY
     for the candidate keys — the join order keeps the verify cost
     O(candidates), never O(history).  ``max_candidates_per_bucket``
-    truncates each index bucket to its C lowest keys (deterministic
-    window rank), bounding hot-bucket blowup exactly like the MinHash
-    form.  Output: (key_new, key_old, cos_sim) with rounded cos_sim ≥
-    ``threshold``."""
-    from pyspark.sql.window import Window
-
-    new_banded = embedding_lsh_index(new_df, dim, vec, key, planes_per_band, bands)
-    old_banded = index.select(F.col(key).alias("_ko"), "band", "bucket")
-    if max_candidates_per_bucket is not None:
-        w = Window.partitionBy("band", "bucket").orderBy("_ko")
-        old_banded = (
-            old_banded.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_candidates_per_bucket)
-            .drop("_rn")
-        )
-    n_part = int(new_banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = (
-        new_banded.repartition(n_part, "band", "bucket")
-        .join(old_banded.repartition(n_part, "band", "bucket"), ["band", "bucket"])
-        .select(F.col(key).alias("key_new"), F.col("_ko").alias("key_old"))
-        .distinct()
+    truncates each index bucket to its C lowest keys, bounding hot-bucket
+    blowup exactly like the MinHash form.  Output: (key_new, key_old,
+    cos_sim) with rounded cos_sim ≥ ``threshold``."""
+    cand = _pairs_against(
+        _sign_bands(new_df, dim, vec, key, planes_per_band, bands),
+        _index_bands(index, key),
+        max_candidates_per_bucket=max_candidates_per_bucket,
     )
     nv = new_df.select(F.col(key).alias("key_new"), F.col(vec).alias("_vn"))
     ov = old_vecs.select(F.col(key).alias("key_old"), F.col(vec).alias("_vo"))

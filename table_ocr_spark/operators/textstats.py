@@ -33,27 +33,30 @@ LANG_PRIORITY = ("en", "de", "fr", "es")  # deterministic tie-break order
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
 
-def tokens_col(text: str = "text") -> Column:
-    """Whitespace tokenization, empty-safe: split(trim(text), '\\s+')."""
-    return F.split(F.trim(F.col(text)), r"\s+")
+def words_col(col: str | Column = "text", lower: bool = True) -> Column:
+    """The engine's one word tokenizer: split(trim(lower(col)), '\\s+'),
+    or split(trim(col), '\\s+') with ``lower=False``.  Empty text yields
+    ``[""]``, NULL text NULL — the DuckDB oracles split the same way."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.split(F.trim(F.lower(c) if lower else c), r"\s+")
 
 
 def token_count_col(text: str = "text") -> Column:
     return F.when(F.trim(F.col(text)) == "", F.lit(0)).otherwise(
-        F.size(tokens_col(text))
+        F.size(words_col(text, lower=False))
     ).cast("long")
 
 
 def marker_hits(text: str, markers: tuple) -> Column:
     lit_arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(tokens_col(text), lambda t: F.array_contains(lit_arr, F.lower(t))))
+    return F.size(F.filter(words_col(text, lower=False), lambda t: F.array_contains(lit_arr, F.lower(t))))
 
 
 def distinct_marker_hits(text: str, markers: tuple) -> Column:
     """# of DISTINCT marker tokens present — one native array_intersect,
     an order of magnitude cheaper than filtering every token."""
     lit_arr = F.array(*[F.lit(m) for m in markers])
-    toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text))), r"\s+"))
+    toks = F.array_distinct(words_col(text))
     return F.size(F.array_intersect(toks, lit_arr))
 
 
@@ -172,7 +175,7 @@ def rolling_fingerprint_col(text: str = "text") -> Column:
     """Order-sensitive document fingerprint (md5 fingerprint is order-
     insensitive-ish only to whitespace; this one distinguishes word order
     and supports incremental/windowed variants)."""
-    toks = F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    toks = words_col(text)
     word_h = F.transform(
         toks,
         lambda t: F.pmod(
@@ -228,7 +231,7 @@ def vocabulary_topk(df: DataFrame, text: str = "text", k: int = 100) -> DataFram
     generator (no shuffle), the groupBy partial-aggregates map-side so
     only (token, partial_count) rows cross the exchange, and top-k is a
     TakeOrdered, not a full sort."""
-    tok = F.explode(F.split(F.trim(F.lower(F.col(text))), r"\s+")).alias("token")
+    tok = F.explode(words_col(text)).alias("token")
     return (
         df.select(tok)
         .filter(F.col("token") != "")
@@ -267,7 +270,7 @@ def top_bigram_share_col(text: str = "text") -> Column:
     re-execute plain subtrees on every reference, and windows built with
     per-element element_at(toks, …) are O(tokens²) on long docs (the same
     pathology fixed in dedup.word_shingles_col)."""
-    toks = F.split(F.trim(F.lower(F.col(text))), r"\s+")
+    toks = words_col(text)
 
     def _bigrams(tk: Column) -> Column:
         return F.when(F.size(tk) < 2, F.array().cast("array<string>")).otherwise(
@@ -336,8 +339,7 @@ def pack_sequences(
 
     The window rides an EXPLICIT repartition(n_buckets, pack_bucket) —
     one partition per bucket.  Explicit width is AQE-coalescing-exempt
-    (bytes underestimate the window's compute density, the
-    minhash_lsh_pairs lesson) and it makes the exchange the one a
+    (see dedup._cobucket) and it makes the exchange the one a
     shard writer needs anyway: jobs/prepare.py writes straight out of
     this partitioning (partitionBy splits co-resident buckets into
     per-bucket files), saving a second full-row shuffle on the same key."""

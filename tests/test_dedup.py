@@ -110,7 +110,7 @@ def test_simhash_matches_pure_python(spark, docs_df):
 
 
 def test_simhash_near_dup_close_exact_dup_equal(spark, docs_df):
-    from table_ocr_spark.operators.dedup import hamming16_col, simhash_col
+    from table_ocr_spark.operators.dedup import hamming_col, simhash_col
 
     sh = {r.doc_id: r.sh for r in docs_df.select("doc_id", simhash_col("text").alias("sh")).collect()}
     assert sh[0] == sh[3]  # exact dup → same simhash
@@ -118,12 +118,12 @@ def test_simhash_near_dup_close_exact_dup_equal(spark, docs_df):
     ham02 = bin(sh[0] ^ sh[2]).count("1")
     assert ham01 < ham02  # near-dup closer than unrelated
 
-    # hamming16_col agrees with python popcount
+    # hamming_col agrees with python popcount
     df = docs_df.alias("a").crossJoin(docs_df.alias("b")).filter("a.doc_id < b.doc_id")
     got = df.select(
         F.col("a.doc_id").alias("i"),
         F.col("b.doc_id").alias("j"),
-        hamming16_col(simhash_col("a.text"), simhash_col("b.text")).alias("d"),
+        hamming_col(simhash_col("a.text"), simhash_col("b.text"), 16).alias("d"),
     ).collect()
     for r in got:
         want = bin(sh[r.i] ^ sh[r.j]).count("1")
@@ -159,9 +159,16 @@ def test_lsh_short_docs_no_false_buckets(spark):
 
 
 def test_lsh_hot_bucket_cap_bounds_pairs(spark, docs_df):
-    """A pathological all-identical corpus stays bounded under the cap and
-    the dropped buckets are observable via the quarantine view."""
-    from table_ocr_spark.operators.dedup import lsh_oversized_buckets, minhash_lsh_pairs
+    """A pathological all-identical corpus stays bounded under the cap in
+    every candidate form (all-pairs, star, against an index) and the
+    dropped buckets are observable via the quarantine view."""
+    from table_ocr_spark.operators.dedup import (
+        lsh_banded,
+        lsh_oversized_buckets,
+        lsh_pairs_against,
+        minhash_lsh_pairs,
+        minhash_lsh_star_pairs,
+    )
 
     clones = spark.range(40).select(
         (F.col("id") + 1000).alias("doc_id"),
@@ -177,12 +184,26 @@ def test_lsh_hot_bucket_cap_bounds_pairs(spark, docs_df):
     over = lsh_oversized_buckets(corpus, max_bucket_size=10).collect()
     assert len(over) == 4 and all(r.bucket_size == 40 for r in over)
 
+    # the same cap in the star and against-index forms: no clone key
+    # survives, the organic near-dup edges do.  Against the index the
+    # clones split 20 new / 20 old, so both sides of the bucket are over
+    # the cap.
+    def keys(rows):
+        return {k for r in rows for k in r}
+
+    star = minhash_lsh_star_pairs(corpus, max_bucket_size=10).collect()
+    assert star and not any(k >= 1000 for k in keys(star))
+    new = corpus.filter(F.col("doc_id") % 2 == 0)
+    old = corpus.filter(F.col("doc_id") % 2 == 1)
+    against = lsh_pairs_against(new, lsh_banded(old), max_bucket_size=10).collect()
+    assert against and not any(k >= 1000 for k in keys(against))
+
 
 def test_simhash_banded_join_complete_vs_brute_force(spark):
     """Pigeonhole completeness: the banded candidate join must find EVERY
     pair within max_hamming < bands of the brute-force cross join."""
     from table_ocr_spark.operators.dedup import (
-        hamming16_col,
+        hamming_col,
         simhash_col,
         simhash_near_dup_pairs,
     )
@@ -201,7 +222,7 @@ def test_simhash_banded_join_complete_vs_brute_force(spark):
         .select(
             F.col("a.k").alias("key_a"),
             F.col("b.k").alias("key_b"),
-            hamming16_col(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
+            hamming_col(F.col("a.sh"), F.col("b.sh"), 16).alias("hamming"),
         )
         .filter(F.col("hamming") <= 3)
         .collect()

@@ -368,12 +368,14 @@ def test_salted_proportional_split_balances_tasks(spark, tmp_path_factory):
 
 
 def test_star_lsh_single_signature_pass(spark):
-    """Star-form candidates: the pivot is a WINDOW min on the pinned
-    (band, bucket) repartition — exactly ONE shingle→signature subtree
-    in the plan.  (The aggregate+join-back form recomputed it twice:
-    AQE broadcasts the tiny pivot frame, and a broadcast side never
-    reuses the repartition exchange.)"""
+    """Star-form candidates: the pivot and the hot-bucket cap are WINDOWS
+    on the pinned (band, bucket) repartition — exactly ONE
+    shingle→signature subtree in the plan, capped or not.  (The
+    aggregate+join-back pivot and the broadcast anti-join cap each
+    recomputed it: a broadcast side never reuses the repartition
+    exchange.)"""
     import __spark_entry__ as E
+    from table_ocr_spark.operators.dedup import minhash_lsh_star_pairs
 
     df = E.queries()["minhash_lsh_star"](spark, "/root/testdata/sf0.001")
     plan = _plan(df)
@@ -382,6 +384,11 @@ def test_star_lsh_single_signature_pass(spark):
     # a second signature subtree would double this
     assert plan.count("partial_min") == 8, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+    docs = E._with_dups(E._docs(spark, "/root/testdata/sf0.001"))
+    capped = _plan(minhash_lsh_star_pairs(docs, "text", "doc_id", max_bucket_size=1000))
+    assert capped.count("partial_min") == 8, capped
+    assert "BroadcastExchange" not in capped, capped
 
 
 def test_incremental_lsh_plan_shape(spark):
