@@ -117,7 +117,6 @@ def build_curated(
     ``kept_observation``: optional ``pyspark.sql.Observation`` attached to
     the post-filter, PRE-dedup frame so the caller can report the dedup
     collapse rate from the same single write action."""
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from table_ocr_spark.operators.conv_scope import strip_conv_boilerplate
@@ -130,11 +129,12 @@ def build_curated(
         redact_pii_col,
         token_count_col,
     )
+    from table_ocr_spark.session import persist
 
     ex = with_extraction(df.select("conv_id", "turn_idx", "text"), cfg)
     strip_in = ex.select("conv_id", "turn_idx", F.col("clean_text").alias("text"))
     if persist_extracted:
-        strip_in = strip_in.persist(StorageLevel.MEMORY_AND_DISK)
+        strip_in = persist(strip_in)
     stripped = strip_conv_boilerplate(strip_in, ratio=strip_ratio).withColumnRenamed(
         "text_stripped", "text"
     )
@@ -148,7 +148,7 @@ def build_curated(
             # the corpus strip reads its input twice (line-hash pass +
             # the final text join) — persist or the conv-strip UDF chain
             # above executes twice
-            stripped = stripped.persist(StorageLevel.MEMORY_AND_DISK)
+            stripped = persist(stripped)
         stripped = strip_corpus_boilerplate(
             stripped.select("conv_id", "turn_idx", "text"),
             min_df=corpus_strip_min_df,
@@ -182,7 +182,7 @@ def build_curated(
         # the dedup semi-join below references `kept` from BOTH branches;
         # uncached, the whole strip+score UDF chain would execute twice
         # (measured at sf0.1: 76 s → ~30 s write action with this persist)
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
+        kept = persist(kept)
 
     if conv_near_dup_threshold is not None:
         # CONVERSATION-level near-dedup, BEFORE turn-level dedup — order
@@ -207,7 +207,7 @@ def build_curated(
             # referenced by the LSH banding and both verify text joins —
             # without a persist the whole collect-per-conv (and the
             # extraction chain under it) executes three times
-            conv = conv.persist(StorageLevel.MEMORY_AND_DISK)
+            conv = persist(conv)
         # materialize once before the CC loop's eager checkpoints: same
         # AQE empty-relation/Observation hazard documented at the
         # turn-level near-dedup's with_k.count() below
@@ -267,7 +267,7 @@ def build_curated(
             # referenced by the LSH build, both verify text joins, and
             # the final anti-join — persist or the exact-dedup semi-join
             # subtree executes four times
-            with_k = with_k.persist(StorageLevel.MEMORY_AND_DISK)
+            with_k = persist(with_k)
         # materialize ONCE before the CC loop's eager checkpoints: an
         # Observation attached upstream (rows_in / rows_kept) completes
         # on the FIRST action that contains its node, and when the LSH
@@ -316,7 +316,7 @@ def build_curated(
                 if persist_extracted and r + 1 < rounds:
                     # next round references the survivor frame from four
                     # branches (banding, both verify sides, anti-join)
-                    surv = surv.persist(StorageLevel.MEMORY_AND_DISK)
+                    surv = persist(surv)
                     pend.append(surv)
             deduped = surv.drop("_k")
         else:
@@ -671,19 +671,23 @@ def main(argv=None) -> int:
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
     from jobs.extract import _resolve_config
-    from table_ocr_spark.session import build_session
-    from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA
+    from table_ocr_spark.session import job_session
 
     cfg = _resolve_config(args.config, None)
     langs = [x for x in args.langs.split(",") if x]
     if args.incremental and not (args.input_snapshot and args.snapshot):
         raise SystemExit("--incremental requires --input-snapshot and --snapshot")
-    spark = build_session(app_name="curate", cores=args.cores)
+    with job_session("curate", args.cores) as spark:
+        return _curate(spark, args, cfg, langs)
 
+
+def _curate(spark, args, cfg, langs: list) -> int:
     from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from table_ocr_spark.session import persist
+    from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA
 
     in_seq = None
     out_table = None
@@ -724,7 +728,6 @@ def main(argv=None) -> int:
                 ) as f:
                     json.dump(summary, f, indent=1, default=str)
                 print(json.dumps(summary, default=str))
-                spark.stop()
                 return 0
             src = in_table.read_changes(spark, after_seq=after_seq, until_seq=in_seq)
         else:
@@ -776,7 +779,6 @@ def main(argv=None) -> int:
         # self-pair hazard as the turn-level block above).  An increment
         # conv near-matching history drops whole — the committed
         # representative wins, rerun-stable.
-        from pyspark import StorageLevel
         from table_ocr_spark.operators.conv_scope import conv_text
         from table_ocr_spark.operators.dedup import (
             lsh_pairs_against,
@@ -789,13 +791,11 @@ def main(argv=None) -> int:
         if conv_idx_table.current_seq() is not None:
             # referenced by the conv re-assembly AND the final anti-join —
             # uncached, the whole upstream chain executes twice
-            curated = curated.persist(StorageLevel.MEMORY_AND_DISK)
+            curated = persist(curated)
             # conv_new is itself referenced twice (LSH banding + the
             # verify text side) — persist, or the collect-per-conv
             # aggregation runs twice even over the cached curated frame
-            conv_new = conv_text(
-                curated.select("conv_id", "turn_idx", "text")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            conv_new = persist(conv_text(curated.select("conv_id", "turn_idx", "text")))
             cand = lsh_pairs_against(
                 conv_new,
                 conv_idx_table.read(spark),
@@ -849,7 +849,6 @@ def main(argv=None) -> int:
         # exact Jaccard on candidates (old texts fetched key-pruned from
         # the curated table), and drops new rows near-matching history
         # (the existing representative wins — rerun-stable by design).
-        from pyspark import StorageLevel
         from table_ocr_spark.operators.dedup import (
             lsh_pairs_against,
             verify_pairs_jaccard,
@@ -859,9 +858,9 @@ def main(argv=None) -> int:
         idx_table = SnapshotTable(os.path.join(args.output, "lsh_index"))
         _sync_lsh_index(spark, out_table, idx_table)
         if idx_table.current_seq() is not None:
-            with_k = curated.withColumn(
+            with_k = persist(curated.withColumn(
                 "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            ))
             # persist: referenced by the candidate build, the verify text
             # join, and the final anti-join — uncached, the whole
             # extract→score→dedup chain would execute three times
@@ -1041,7 +1040,6 @@ def main(argv=None) -> int:
                 ) as f:
                     json.dump(summary, f, indent=1, default=str)
                 print(json.dumps(summary, default=str))
-                spark.stop()
                 return 0
         else:
             # a full (non-incremental) run recomputes the WHOLE corpus:
@@ -1084,7 +1082,6 @@ def main(argv=None) -> int:
     with open(os.path.join(args.output, "_curation_summary.json"), "w") as f:
         json.dump(summary, f, indent=1, default=str)
     print(json.dumps(summary, default=str))
-    spark.stop()
     return 0
 
 

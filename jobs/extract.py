@@ -77,12 +77,11 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     from table_ocr_spark.plans.pipeline import run_extract
-    from table_ocr_spark.session import build_session
+    from table_ocr_spark.session import job_session
 
     cfg = _resolve_config(args.config, args.config_store)
 
-    spark = build_session(app_name="extract", cores=args.cores)
-    try:
+    with job_session("extract", args.cores) as spark:
         res = run_extract(
             spark,
             args.input,
@@ -107,8 +106,6 @@ def main(argv=None) -> int:
             )
         )
         return 0
-    finally:
-        spark.stop()
 
 
 if __name__ == "__main__":

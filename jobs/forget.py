@@ -66,12 +66,19 @@ def main(argv=None) -> int:
     if not ids:
         raise SystemExit("no conversation ids given (--conv-ids / --conv-file)")
 
-    from pyspark.sql import functions as F
+    from table_ocr_spark.session import job_session
 
-    from table_ocr_spark.session import build_session
+    with job_session("forget", args.cores) as spark:
+        return _forget(spark, args, ids)
+
+
+def _forget(spark, args, ids: list) -> int:
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from table_ocr_spark.session import local_frame
     from table_ocr_spark.sources.snapshots import SnapshotTable
 
-    spark = build_session(app_name="forget", cores=args.cores)
     data = SnapshotTable(os.path.join(args.table, "table"))
     if data.current_seq() is None:
         raise SystemExit(f"no snapshot table at {args.table}/table")
@@ -108,9 +115,12 @@ def main(argv=None) -> int:
 
     summary = {"table": args.table, "conv_ids": len(ids), "rows_deleted": len(keys)}
     if keys:
-        src = spark.createDataFrame([(c,) for c in ids], "conv_id string")
+        # one conv-id frame serves the data delete and the conv-index scrub
+        conv_ids = local_frame(
+            spark, [(c,) for c in ids], T.StructType([T.StructField("conv_id", T.StringType())])
+        )
         seq = data.merge(
-            spark, src, ["conv_id"], when_matched="delete",
+            spark, conv_ids, ["conv_id"], when_matched="delete",
             summary={"forget_conv_ids": len(ids), **resume},
         )
         summary["data_seq"] = seq
@@ -136,7 +146,9 @@ def main(argv=None) -> int:
 
         idx = SnapshotTable(os.path.join(args.table, "lsh_index"))
         if idx.current_seq() is not None:
-            ksrc = spark.createDataFrame([(k,) for k in keys], "_k string")
+            ksrc = local_frame(
+                spark, [(k,) for k in keys], T.StructType([T.StructField("_k", T.StringType())])
+            )
             # data_seq: after the scrub the index covers the data table
             # exactly at the merge seq — without recording that, the next
             # curate run's sync would see a non-append commit and rebuild
@@ -151,9 +163,8 @@ def main(argv=None) -> int:
         # forgotten convs' derived bands the same way
         cidx = SnapshotTable(os.path.join(args.table, "conv_lsh_index"))
         if cidx.current_seq() is not None:
-            csrc = spark.createDataFrame([(c,) for c in ids], "conv_id string")
             summary["conv_index_seq"] = cidx.merge(
-                spark, csrc, ["conv_id"], when_matched="delete",
+                spark, conv_ids, ["conv_id"], when_matched="delete",
                 summary={"forget_conv_ids": len(ids), "data_seq": seq,
                          **_carried_algo_tag(cidx)},
             )
@@ -171,7 +182,6 @@ def main(argv=None) -> int:
         summary["physically_expired"] = False
 
     print(json.dumps(summary, default=str))
-    spark.stop()
     return 0
 
 

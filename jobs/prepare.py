@@ -133,12 +133,7 @@ def main(argv=None) -> int:
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
 
-    import time
-
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from table_ocr_spark.session import build_session
+    from table_ocr_spark.session import job_session
 
     mixture = None
     if args.mixture:
@@ -148,7 +143,16 @@ def main(argv=None) -> int:
         else:
             mixture = json.loads(args.mixture)
 
-    spark = build_session(app_name="prepare", cores=args.cores)
+    with job_session("prepare", args.cores) as spark:
+        return _prepare(spark, args, mixture)
+
+
+def _prepare(spark, args, mixture: dict | None) -> int:
+    import time
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     t0 = time.time()
 
     if args.input_snapshot:
@@ -235,7 +239,6 @@ def main(argv=None) -> int:
     with open(os.path.join(args.output, "_prepare_summary.json"), "w") as f:
         json.dump(summary, f, indent=1, default=str)
     print(json.dumps(summary, default=str))
-    spark.stop()
     return 0
 
 

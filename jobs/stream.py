@@ -60,10 +60,14 @@ def main(argv=None) -> int:
         raise SystemExit("--strip-conv-boilerplate and --snapshot-sink are mutually exclusive")
 
     from jobs.extract import _resolve_config
-    from table_ocr_spark.session import build_session
+    from table_ocr_spark.session import job_session
 
     cfg = _resolve_config(args.config, None)
-    spark = build_session(app_name="stream_extract", cores=args.cores)
+    with job_session("stream_extract", args.cores) as spark:
+        return _stream(spark, args, cfg)
+
+
+def _stream(spark, args, cfg) -> int:
     # recentProgress keeps only the last numRecentProgressUpdates entries
     # (default 100) — an AvailableNow drain over many landed files emits
     # one progress per micro-batch, so the post-run batch/row tally below
@@ -131,7 +135,8 @@ def main(argv=None) -> int:
             )
         )
     finally:
-        spark.stop()
+        # a borrowed session outlives the job: never leave its query running
+        q.stop()
     return 0
 
 

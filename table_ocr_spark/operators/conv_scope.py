@@ -210,7 +210,7 @@ def strip_corpus_boilerplate(
     (corpus-wide it can be millions of lines); each document only ever
     carries ITS OWN banned intersection.  ``persist_hashes`` caches the
     one Python-UDF projection that both aggregation branches read."""
-    from pyspark import StorageLevel
+    from table_ocr_spark.session import persist
 
     keys = list(key_cols)
     src = df
@@ -218,7 +218,7 @@ def strip_corpus_boilerplate(
     if persist_hashes:
         # referenced by the doc-frequency count AND the per-doc banned
         # intersection — uncached, the line-hash UDF pass runs twice
-        hashes = hashes.persist(StorageLevel.MEMORY_AND_DISK)
+        hashes = persist(hashes)
     exploded = hashes.select(*keys, F.explode("lh").alias("h"))
     # lh is per-doc DISTINCT, so count(1) per hash IS document frequency
     banned = (

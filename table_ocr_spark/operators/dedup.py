@@ -43,11 +43,13 @@ families (pointer-jumped connected components, O(log diameter) rounds).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from table_ocr_spark.operators.textstats import fingerprint_col, hash60_col, words_col
+from table_ocr_spark.session import persist
 
 
 # ------------------------------------------------------------- exact ------
@@ -747,7 +749,7 @@ def near_dup_components(
             new_labels = _cut(new_labels)  # lineage cut (reliable when dir set)
             cached_this_round = None
         else:
-            new_labels = new_labels.persist()
+            new_labels = persist(new_labels, StorageLevel.MEMORY_AND_DISK_DESER)
             cached_this_round = new_labels
         changed = new_labels.filter(F.col("label") < F.col("_old")).limit(1).count()
         if prev_persisted is not None:

@@ -90,7 +90,7 @@ def ngram_lm_score(
     and persisting the raw source upstream does not help — each branch
     would still re-run the tokenize+explode projection, the dominant
     cost at corpus scale.  (MEMORY_AND_DISK, narrow (_k, wp, w) rows.)"""
-    from pyspark import StorageLevel
+    from table_ocr_spark.session import persist
 
     base = df.select(
         F.col(key).alias("_k"), bigram_pairs_col(text).alias("_bg")
@@ -102,10 +102,9 @@ def ngram_lm_score(
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("_cu"))
     total = uni.agg(F.sum("_cu").alias("_T"))
 
-    bg_occ = (
+    bg_occ = persist(
         base.select("_k", F.explode("_bg").alias("_b"))
         .select("_k", F.col("_b.wp").alias("wp"), F.col("_b.w").alias("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     big = (

@@ -27,6 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from table_ocr_spark.session import local_frame
 
 PPM = 1_000_000
 
@@ -49,9 +52,10 @@ def mixture_rates(df: DataFrame, targets: dict, group: str = "lang") -> DataFram
             f"target shares round to 0 ppm for {zero}; the smallest "
             f"expressible share is 1/{PPM}"
         )
-    tgt = spark.createDataFrame(
-        list(shares.items()), f"{group} string, share_ppm long"
+    schema = T.StructType(
+        [T.StructField(group, T.StringType()), T.StructField("share_ppm", T.LongType())]
     )
+    tgt = local_frame(spark, list(shares.items()), schema)
     counts = df.groupBy(group).agg(F.count(F.lit(1)).alias("group_count"))
     # PINNED semantics (matches the DuckDB oracle): a targeted group
     # ABSENT from the corpus is an unsatisfiable constraint and is

@@ -144,8 +144,6 @@ def run_extract(
     result = RunResult(run_id=run_id, config_hash=chash, n_buckets=n_buckets)
     result.skipped_buckets = sorted(committed)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     from table_ocr_spark.sources.catalog import load_transcripts
 
     src = load_transcripts(spark, input_path, fmt=input_format).select(
@@ -198,9 +196,13 @@ def run_extract(
                 F.sum(F.when(is_b, F.col("_cell_count"))).alias(f"cells_{b}"),
             ]
         ex = ex.observe(obs, *aggs)
+        # dynamic overwrite replaces only this group's bucket dirs; set on
+        # the write, not the session, so a caller's later writes keep
+        # their own overwrite mode
         (
             ex.drop("_cell_count")
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(table.config_data_dir(chash))
         )

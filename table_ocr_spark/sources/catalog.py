@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from table_ocr_spark.session import local_frame
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -172,7 +174,7 @@ class ExtractionTable:
     LINEAGE_COMPACT_THRESHOLD = 64
 
     def append_lineage(self, spark: SparkSession, rows: list) -> None:
-        df = spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        df = local_frame(spark, rows, LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
         self._maybe_compact_lineage(spark)
 

@@ -15,8 +15,10 @@ import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from table_ocr_spark.config import ExtractorConfig
+from table_ocr_spark.session import local_frame
 
 
 class ConfigStore:
@@ -62,6 +64,7 @@ class ConfigStore:
         for name in self.names():
             cfg = self.get(name)
             rows.append((name, cfg.config_hash(), cfg.to_json()))
-        return spark.createDataFrame(
-            rows, "name string, config_hash string, config_json string"
+        schema = T.StructType(
+            [T.StructField(c, T.StringType()) for c in ("name", "config_hash", "config_json")]
         )
+        return local_frame(spark, rows, schema)

@@ -68,8 +68,11 @@ import uuid
 from dataclasses import dataclass
 from typing import Any, Dict, List, Optional, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from table_ocr_spark.session import local_frame, persist
 
 _SNAP_FMT = "snap-%08d.json"
 _SNAP_PREFIX = "snap-"
@@ -576,7 +579,7 @@ class SnapshotTable:
         if not files:
             if schema is None:
                 raise ValueError("empty snapshot with no recorded schema")
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         paths = [os.path.join(self.root, f.path) for f in files]
         reader = spark.read
         if schema is not None:
@@ -629,7 +632,7 @@ class SnapshotTable:
         if not new:
             if schema is None:
                 raise ValueError("empty change set with no recorded schema")
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         paths = [os.path.join(self.root, f.path) for f in new]
         reader = spark.read
         if schema is not None:
@@ -807,7 +810,7 @@ class SnapshotTable:
         # stats cut (min/max of the leading key; count/distinct for the dup
         # check rides the same single-row collect)
         lead = key_cols[0]
-        src = self._conform(source, m.get("schema")).persist()
+        src = persist(self._conform(source, m.get("schema")), StorageLevel.MEMORY_AND_DISK_DESER)
         agg = src.agg(
             F.min(lead).alias("lo"),
             F.max(lead).alias("hi"),

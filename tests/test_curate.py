@@ -32,7 +32,6 @@ def curated_out(spark, tmp_path_factory, monkeypatch_module):
     write_transcripts_parquet(pdf, str(base / "in"))
 
     monkeypatch_module.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch_module.setattr(spark, "stop", lambda: None)
     rc = C.main(
         [
             "--input", str(base / "in"),
@@ -96,7 +95,6 @@ def test_curate_lang_filter(spark, tmp_path, monkeypatch):
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     rc = C.main(
         [
             "--input", str(tmp_path / "in"),
@@ -125,7 +123,6 @@ def test_curate_decontaminates_eval_overlap(spark, tmp_path_factory, monkeypatch
     write_transcripts_parquet(pdf, str(base / "in"))
 
     monkeypatch_module.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch_module.setattr(spark, "stop", lambda: None)
 
     # baseline run (no decontamination)
     rc = C.main(["--input", str(base / "in"), "--output", str(base / "out0"),
@@ -168,7 +165,6 @@ def test_curate_snapshot_mode_commits_atomic_history(spark, tmp_path, monkeypatc
     pdf = synth.gen_pandas(8, seed=21, max_long=30)
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     out = str(tmp_path / "out")
     rc = C.main(["--input", str(tmp_path / "in"), "--output", out,
@@ -222,7 +218,6 @@ def test_curate_quota_and_sample(spark, tmp_path, monkeypatch):
         synth.gen_pandas(10, seed=3, max_long=60), str(tmp_path / "in")
     )
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     common = ["--input", str(tmp_path / "in"), "--min-quality", "0.0"]
 
     assert C.main(common + ["--output", str(tmp_path / "full")]) == 0
@@ -291,7 +286,6 @@ def test_curate_near_dedup(spark, tmp_path, monkeypatch):
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     common = ["--input", str(tmp_path / "in"), "--min-quality", "0.0"]
 
     assert C.main(common + ["--output", str(tmp_path / "plain")]) == 0
@@ -349,7 +343,6 @@ def test_curate_conv_near_dedup_drops_edited_reupload_whole(spark, tmp_path, mon
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     common = ["--input", str(tmp_path / "in"), "--min-quality", "0.0"]
 
     # baseline: turn dedup fragments the re-upload (edited turn orphaned)
@@ -392,7 +385,6 @@ def test_curate_incremental_conv_near_dedup_against_history(spark, tmp_path, mon
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_root, out_root = str(tmp_path / "in"), str(tmp_path / "out")
     in_table = SnapshotTable(in_root)
@@ -473,7 +465,6 @@ def test_curate_incremental_concurrent_writer_aborts_cleanly(spark, tmp_path, mo
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_root, out_root = str(tmp_path / "in"), str(tmp_path / "out")
     in_table = SnapshotTable(in_root)
@@ -573,7 +564,6 @@ def test_curate_incremental_processes_only_appended_files(spark, tmp_path, monke
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_root, out_root = str(tmp_path / "in"), str(tmp_path / "out")
     in_table = SnapshotTable(in_root)
@@ -648,7 +638,6 @@ def test_curate_incremental_near_dedup_against_history(spark, tmp_path, monkeypa
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     base = (
         "the quarterly revenue report shows strong growth across all "
@@ -743,7 +732,6 @@ def test_curate_incremental_equals_full_run_fingerprints(spark, tmp_path, monkey
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     pdf = synth.gen_pandas(10, seed=47, max_long=30)
     # split by conv hash (conversations never straddle batches — the
@@ -791,7 +779,6 @@ def test_curate_compact_after_keeps_incremental_loop_working(spark, tmp_path, mo
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     base = (
         "the incremental compaction scenario text body keeps the near "
@@ -860,7 +847,6 @@ def test_curate_incremental_reingest_rewritten_turn_not_self_dropped(spark, tmp_
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     # 31 distinct words: appending one more gives word-set jaccard
     # 31/32 ≈ 0.969 < 0.97 (below threshold → must be KEPT) while the
@@ -922,7 +908,6 @@ def test_curate_strip_corpus_min_df(spark, tmp_path, monkeypatch):
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     common = ["--input", str(tmp_path / "in"), "--min-quality", "0.0"]
 
     assert C.main(common + ["--output", str(tmp_path / "plain")]) == 0
@@ -960,7 +945,6 @@ def test_curate_incremental_overlapping_lower_head_race_aborts(spark, tmp_path, 
         return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_root, out_root = str(tmp_path / "in"), str(tmp_path / "out")
     in_table = SnapshotTable(in_root)

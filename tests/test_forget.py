@@ -28,7 +28,6 @@ def test_forget_removes_conv_from_table_index_and_history(spark, tmp_path, monke
     import jobs.forget as FG
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_table = SnapshotTable(str(tmp_path / "in"))
     in_table.append(_tx(spark, synth.gen_pandas(6, seed=61, max_long=25)))
@@ -75,7 +74,6 @@ def test_forget_expire_physically_drops_history(spark, tmp_path, monkeypatch):
     import jobs.forget as FG
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_table = SnapshotTable(str(tmp_path / "in"))
     in_table.append(_tx(spark, synth.gen_pandas(4, seed=63, max_long=20)))
@@ -121,7 +119,6 @@ def test_forget_carries_legacy_algo_tag_so_sync_still_rebuilds(spark, tmp_path, 
     import jobs.forget as FG
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     in_table = SnapshotTable(str(tmp_path / "in"))
     in_table.append(_tx(spark, synth.gen_pandas(5, seed=63, max_long=20)))
@@ -159,3 +156,37 @@ def test_forget_carries_legacy_algo_tag_so_sync_still_rebuilds(spark, tmp_path, 
     assert newest2["operation"] == "overwrite"
     from table_ocr_spark.operators.dedup import LSH_ALGO
     assert newest2["summary"]["lsh_algo"] == LSH_ALGO
+
+
+def test_jobs_borrow_a_running_session(spark, tmp_path):
+    """Called inside a live session, incremental near-dedup curate and
+    forget leave it running (no spark.stop, no Python-worker re-fork) and
+    unpersist every frame they persisted, while the caller's own cached
+    frame stays cached."""
+    from table_ocr_spark import synth
+    from table_ocr_spark.sources.snapshots import SnapshotTable
+
+    import jobs.curate as C
+    import jobs.forget as FG
+
+    sc = spark.sparkContext
+    mine = spark.range(100).persist()
+    assert mine.count() == 100
+    n_persisted = len(sc._jsc.getPersistentRDDs())
+
+    in_table = SnapshotTable(str(tmp_path / "in"))
+    args = ["--input", str(tmp_path / "in"), "--output", str(tmp_path / "out"),
+            "--min-quality", "0.0", "--input-snapshot", "--incremental",
+            "--snapshot", "--near-dedup", "0.5", "--cores", "4"]
+    # the second increment runs against an existing LSH index, so its
+    # persisted frames (extracted rows keyed for the index join) exist
+    for seed in (65, 66):
+        in_table.append(_tx(spark, synth.gen_pandas(4, seed=seed, max_long=20)))
+        assert C.main(args) == 0
+    victim = SnapshotTable(str(tmp_path / "out" / "table")).read(spark).first().conv_id
+    assert FG.main(["--table", str(tmp_path / "out"), "--conv-ids", victim]) == 0
+
+    assert not sc._jsc.sc().isStopped()
+    assert len(sc._jsc.getPersistentRDDs()) == n_persisted
+    assert mine.storageLevel.useMemory
+    mine.unpersist()

@@ -419,3 +419,62 @@ def test_conv_text_single_exchange(spark):
     plan = _plan(conv_text(df))
     assert plan.count("Exchange") - plan.count("ReusedExchange") == 1, plan
     assert "Window" not in plan, plan
+
+
+def test_local_frame_plans_local_table_scan(spark):
+    """Driver-built frames are Arrow local relations: ``LocalTableScan``
+    with the exact schema, for tuple rows, dict rows and no rows.
+    ``createDataFrame`` on a Python list plans a pickled-RDD scan instead,
+    and every action on it starts a plain Python worker."""
+    from table_ocr_spark.session import local_frame
+    from table_ocr_spark.sources.catalog import LINEAGE_SCHEMA
+
+    row = ("r", "c", 3, "committed", 10, 0.5, 2, 7)
+    assert "ExistingRDD" in _plan(spark.createDataFrame([row], LINEAGE_SCHEMA))
+    for rows in ([row], [dict(zip(LINEAGE_SCHEMA.fieldNames(), row))], []):
+        df = local_frame(spark, rows, LINEAGE_SCHEMA)
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.schema == LINEAGE_SCHEMA
+        assert [tuple(r) for r in df.collect()] == [row] * len(rows)
+    with pytest.raises(ValueError, match="rows"):
+        local_frame(spark, [{"run_id": "r", "rows": 1}], LINEAGE_SCHEMA)
+
+
+def test_session_lifecycle_calls_only_in_session_helpers():
+    """Outside ``table_ocr_spark/session.py``, no module in the package or
+    ``jobs/`` builds a frame from Python rows (``local_frame`` does),
+    persists a frame (``persist`` does, so a job in a borrowed session can
+    unpersist it) or stops a session (``job_session`` does, and only one
+    it started)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    owner = {"createDataFrame": "local_frame", "persist": "persist", "cache": "persist",
+             "stop": "job_session"}
+
+    def _is_session(node):
+        return (isinstance(node, ast.Name) and node.id in ("spark", "sc")) or (
+            isinstance(node, ast.Attribute) and node.attr in ("sparkSession", "sparkContext")
+        )
+
+    bad = []
+    for path in sorted([*root.glob("table_ocr_spark/**/*.py"), *root.glob("jobs/*.py")]):
+        in_session = path == root / "table_ocr_spark" / "session.py"
+
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    walk(child, child.name)
+                    continue
+                f = getattr(child, "func", None)
+                if isinstance(child, ast.Call) and isinstance(f, ast.Attribute) \
+                        and f.attr in owner \
+                        and (f.attr != "stop" or _is_session(f.value)) \
+                        and not (in_session and fn == owner[f.attr]):
+                    bad.append(f"{path.relative_to(root)}:{child.lineno} .{f.attr}()")
+                walk(child, fn)
+
+        walk(ast.parse(path.read_text()), None)
+    assert not bad, bad

@@ -75,7 +75,6 @@ def _run(spark, monkeypatch, curated_dir, out, shuffle_partitions, extra=()):
     import jobs.prepare as P
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
@@ -169,7 +168,6 @@ def test_prepare_reads_curate_snapshot_output(spark, tmp_path, monkeypatch):
     from table_ocr_spark.sources.catalog import write_transcripts_parquet
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     pdf = synth.gen_pandas(10, seed=5, max_long=30)
     write_transcripts_parquet(pdf, str(tmp_path / "in"))
     curated = str(tmp_path / "curated")

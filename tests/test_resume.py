@@ -72,6 +72,20 @@ def test_rerun_is_noop(spark, input_path, tmp_path):
     assert len(res2.skipped_buckets) == N_BUCKETS
 
 
+def test_run_extract_leaves_session_conf_unchanged(spark, input_path, tmp_path):
+    """The bucket write asks for dynamic partition overwrite on itself, not
+    on the session: a caller's later ``overwrite`` of a partitioned table
+    in the same session must still replace every partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        before = spark.conf.getAll
+        run_extract(spark, input_path, str(tmp_path / "x"), n_buckets=N_BUCKETS, commit_groups=2)
+        assert spark.conf.getAll == before
+    finally:
+        spark.conf.unset(key)
+
+
 def test_new_config_recomputes(spark, input_path, tmp_path):
     out = str(tmp_path / "extracted3")
     run_extract(spark, input_path, out, n_buckets=4, commit_groups=1, run_id="r1")
@@ -158,10 +172,11 @@ def test_lineage_compaction_bounds_files_and_preserves_rows(spark, tmp_path):
     for run in range(n_commits):
         t.append_lineage(spark, [{
             "run_id": f"r{run}", "config_hash": "c", "bucket": run % 8,
-            "status": "committed", "rows": 10, "convs": 2,
-            "boilerplate_ratio": 0.1, "cell_count": 3, "wall_ms": 5,
+            "status": "committed", "turns": 10 + run,
+            "boilerplate_ratio_avg": 0.1, "cell_count": 3, "wall_ms": 5,
         }])
     files = [f for f in os.listdir(t.lineage_dir) if f.endswith(".parquet")]
     assert len(files) <= t.LINEAGE_COMPACT_THRESHOLD
     assert t.read_lineage(spark).count() == n_commits
+    assert t.read_lineage(spark).filter(F.col("run_id") == "r3").first().turns == 13
     assert t.committed_buckets(spark, "c") == set(range(8))

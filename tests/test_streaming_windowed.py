@@ -106,7 +106,6 @@ def test_stream_cli_summary_reports_batches(spark, tmp_path, monkeypatch, capsys
     n_rows = spark.read.parquet(str(tmp_path / "in")).count()
 
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)  # keep the shared session
     rc = S.main(
         [
             "--input", str(tmp_path / "in"),

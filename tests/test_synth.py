@@ -100,7 +100,6 @@ def test_extract_cli_reads_jsonl(spark, tmp_path, monkeypatch, capsys):
 
     write_transcripts_jsonl(synth.gen_pandas(5, seed=9, max_long=20), str(tmp_path / "in"))
     monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     rc = X.main(
         [
             "--input", str(tmp_path / "in"),
