@@ -83,7 +83,6 @@ def build_curated(
     min_quality: float,
     langs: list[str] | None,
     strip_ratio: float,
-    persist_extracted: bool = True,
     kept_observation=None,
     eval_df=None,
     decontam_n: int = 8,
@@ -105,15 +104,6 @@ def build_curated(
     ``with_k.count()``) that completes upstream Observations before AQE's
     empty-relation fold can null them (see the in-line notes).
 
-    ``persist_extracted``: the boilerplate strip's linehash plan reads its
-    input TWICE (once to count line hashes, once to apply the banned
-    sets), and here that input is the extraction UDF's output — without a
-    persist the Arrow extraction kernel runs twice (measured at sf0.1:
-    37 s → 17 s with MEMORY_AND_DISK persist on the extracted frame).  At
-    the 100 TB design point the same logic holds per executor: caching
-    the extracted text (≈ input-sized, spills to local disk) is strictly
-    cheaper than a second pass through the Python extraction kernel.
-
     ``kept_observation``: optional ``pyspark.sql.Observation`` attached to
     the post-filter, PRE-dedup frame so the caller can report the dedup
     collapse rate from the same single write action."""
@@ -132,9 +122,17 @@ def build_curated(
     from table_ocr_spark.session import persist
 
     ex = with_extraction(df.select("conv_id", "turn_idx", "text"), cfg)
-    strip_in = ex.select("conv_id", "turn_idx", F.col("clean_text").alias("text"))
-    if persist_extracted:
-        strip_in = persist(strip_in)
+    # the boilerplate strip's linehash plan reads its input TWICE (once to
+    # count line hashes, once to apply the banned sets), and here that
+    # input is the extraction UDF's output — without a persist the Arrow
+    # extraction kernel runs twice (measured at sf0.1: 37 s → 17 s with
+    # MEMORY_AND_DISK persist on the extracted frame).  At the 100 TB
+    # design point the same logic holds per executor: caching the
+    # extracted text (≈ input-sized, spills to local disk) is strictly
+    # cheaper than a second pass through the Python extraction kernel.
+    strip_in = persist(
+        ex.select("conv_id", "turn_idx", F.col("clean_text").alias("text"))
+    )
     stripped = strip_conv_boilerplate(strip_in, ratio=strip_ratio).withColumnRenamed(
         "text_stripped", "text"
     )
@@ -144,15 +142,13 @@ def build_curated(
         # to the conv strip (operators/conv_scope.strip_corpus_boilerplate).
         from table_ocr_spark.operators.conv_scope import strip_corpus_boilerplate
 
-        if persist_extracted:
-            # the corpus strip reads its input twice (line-hash pass +
-            # the final text join) — persist or the conv-strip UDF chain
-            # above executes twice
-            stripped = persist(stripped)
+        # the corpus strip reads its input twice (line-hash pass + the
+        # final text join) — persist or the conv-strip UDF chain above
+        # executes twice
+        stripped = persist(stripped)
         stripped = strip_corpus_boilerplate(
             stripped.select("conv_id", "turn_idx", "text"),
             min_df=corpus_strip_min_df,
-            persist_hashes=persist_extracted,
         ).withColumnRenamed("text_stripped", "text").drop("n_banned_lines")
 
     # NB: stats/fingerprint are computed on the PRE-redaction text (one
@@ -178,11 +174,10 @@ def build_curated(
         kept = kept.filter(F.col("lang").isin(langs))
     if kept_observation is not None:
         kept = kept.observe(kept_observation, F.count(F.lit(1)).alias("rows_kept"))
-    if persist_extracted:
-        # the dedup semi-join below references `kept` from BOTH branches;
-        # uncached, the whole strip+score UDF chain would execute twice
-        # (measured at sf0.1: 76 s → ~30 s write action with this persist)
-        kept = persist(kept)
+    # the dedup semi-join below references `kept` from BOTH branches;
+    # uncached, the whole strip+score UDF chain would execute twice
+    # (measured at sf0.1: 76 s → ~30 s write action with this persist)
+    kept = persist(kept)
 
     if conv_near_dup_threshold is not None:
         # CONVERSATION-level near-dedup, BEFORE turn-level dedup — order
@@ -202,12 +197,10 @@ def build_curated(
             verify_pairs_jaccard,
         )
 
-        conv = conv_text(kept.select("conv_id", "turn_idx", "text"))
-        if persist_extracted:
-            # referenced by the LSH banding and both verify text joins —
-            # without a persist the whole collect-per-conv (and the
-            # extraction chain under it) executes three times
-            conv = persist(conv)
+        # referenced by the LSH banding and both verify text joins —
+        # without a persist the whole collect-per-conv (and the
+        # extraction chain under it) executes three times
+        conv = persist(conv_text(kept.select("conv_id", "turn_idx", "text")))
         # materialize once before the CC loop's eager checkpoints: same
         # AQE empty-relation/Observation hazard documented at the
         # turn-level near-dedup's with_k.count() below
@@ -263,11 +256,10 @@ def build_curated(
         with_k = deduped.withColumn(
             "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
         )
-        if persist_extracted:
-            # referenced by the LSH build, both verify text joins, and
-            # the final anti-join — persist or the exact-dedup semi-join
-            # subtree executes four times
-            with_k = persist(with_k)
+        # referenced by the LSH build, both verify text joins, and the
+        # final anti-join — persist or the exact-dedup semi-join subtree
+        # executes four times
+        with_k = persist(with_k)
         # materialize ONCE before the CC loop's eager checkpoints: an
         # Observation attached upstream (rows_in / rows_kept) completes
         # on the FIRST action that contains its node, and when the LSH
@@ -313,7 +305,7 @@ def build_curated(
                 surv = dedup_near_representatives(surv, pairs, key="_k")
                 if len(pend) >= 2:
                     pend.pop(0).unpersist(False)
-                if persist_extracted and r + 1 < rounds:
+                if r + 1 < rounds:
                     # next round references the survivor frame from four
                     # branches (banding, both verify sides, anti-join)
                     surv = persist(surv)
@@ -689,6 +681,16 @@ def _curate(spark, args, cfg, langs: list) -> int:
     from table_ocr_spark.session import persist
     from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA
 
+    def _report(summary: dict) -> int:
+        # every exit writes the same sidecar (no-new-input and
+        # already-committed ones too) — a monitoring reader always
+        # finds the latest run's summary here — and prints it
+        os.makedirs(args.output, exist_ok=True)
+        with open(os.path.join(args.output, "_curation_summary.json"), "w") as f:
+            json.dump(summary, f, indent=1, default=str)
+        print(json.dumps(summary, default=str))
+        return 0
+
     in_seq = None
     out_table = None
     if args.input_snapshot:
@@ -720,15 +722,7 @@ def _curate(spark, args, cfg, langs: list) -> int:
                     "rows_out": 0,
                     "no_new_input": True,
                 }
-                # same sidecar contract as a real run — a monitoring
-                # reader always finds the latest run's summary here
-                os.makedirs(args.output, exist_ok=True)
-                with open(
-                    os.path.join(args.output, "_curation_summary.json"), "w"
-                ) as f:
-                    json.dump(summary, f, indent=1, default=str)
-                print(json.dumps(summary, default=str))
-                return 0
+                return _report(summary)
             src = in_table.read_changes(spark, after_seq=after_seq, until_seq=in_seq)
         else:
             src = in_table.read(spark, seq=in_seq)
@@ -1034,13 +1028,7 @@ def _curate(spark, args, cfg, langs: list) -> int:
                     "increment_already_committed": True,
                     "detail": str(e),
                 }
-                os.makedirs(args.output, exist_ok=True)
-                with open(
-                    os.path.join(args.output, "_curation_summary.json"), "w"
-                ) as f:
-                    json.dump(summary, f, indent=1, default=str)
-                print(json.dumps(summary, default=str))
-                return 0
+                return _report(summary)
         else:
             # a full (non-incremental) run recomputes the WHOLE corpus:
             # commit via overwrite so rerunning the identical command is
@@ -1079,10 +1067,7 @@ def _curate(spark, args, cfg, langs: list) -> int:
         )
         summary = _metrics()
     summary["wall_ms"] = int((time.time() - t0) * 1000)
-    with open(os.path.join(args.output, "_curation_summary.json"), "w") as f:
-        json.dump(summary, f, indent=1, default=str)
-    print(json.dumps(summary, default=str))
-    return 0
+    return _report(summary)
 
 
 if __name__ == "__main__":

@@ -183,7 +183,6 @@ def strip_corpus_boilerplate(
     text: str = "text",
     key_cols: tuple = ("conv_id", "turn_idx"),
     min_df: int = 3,
-    persist_hashes: bool = True,
 ) -> DataFrame:
     """CORPUS-level boilerplate line removal (the C4/Dolma rule): any
     trimmed line present in ≥ ``min_df`` distinct documents is removed
@@ -208,17 +207,14 @@ def strip_corpus_boilerplate(
     the full text never moves, and the strip is a second map-side pass.
     The banned set is never materialized driver-side or broadcast whole
     (corpus-wide it can be millions of lines); each document only ever
-    carries ITS OWN banned intersection.  ``persist_hashes`` caches the
-    one Python-UDF projection that both aggregation branches read."""
+    carries ITS OWN banned intersection."""
     from table_ocr_spark.session import persist
 
     keys = list(key_cols)
     src = df
-    hashes = src.select(*keys, _line_hashes_udf(text).alias("lh"))
-    if persist_hashes:
-        # referenced by the doc-frequency count AND the per-doc banned
-        # intersection — uncached, the line-hash UDF pass runs twice
-        hashes = persist(hashes)
+    # referenced by the doc-frequency count AND the per-doc banned
+    # intersection — uncached, the line-hash UDF pass runs twice
+    hashes = persist(src.select(*keys, _line_hashes_udf(text).alias("lh")))
     exploded = hashes.select(*keys, F.explode("lh").alias("h"))
     # lh is per-doc DISTINCT, so count(1) per hash IS document frequency
     banned = (

@@ -93,30 +93,9 @@ def make_extract_udf(cfg: ExtractorConfig = DEFAULT_CONFIG):
     return extract_udf
 
 
-def with_extraction(
-    df: DataFrame,
-    cfg: ExtractorConfig = DEFAULT_CONFIG,
-    bound_workers: bool = True,
-) -> DataFrame:
+def with_extraction(df: DataFrame, cfg: ExtractorConfig = DEFAULT_CONFIG) -> DataFrame:
     """transcripts(conv_id, turn_idx, text, …) → extraction output
-    (FIXTURES.md §2 schema). A pure projection — zero shuffles.
-
-    ``bound_workers``: when the session is oversubscribed local mode
-    (``session.python_worker_budget``), coalesce THIS stage's input so at
-    most ``host_cores/2`` tasks — and therefore Python workers — run
-    concurrently.  coalesce is a narrow dependency: over a scan it merges
-    file splits into fewer tasks; over the salted repartition it makes the
-    reduce stage read multiple shuffle partitions per task, while the
-    shuffle map side and every other (JVM-only) stage keep the full slot
-    count.  No-op on a real cluster, where executor-core sizing owns the
-    worker budget.
-    """
-    if bound_workers and not df.isStreaming:
-        from table_ocr_spark.session import python_worker_budget
-
-        budget = python_worker_budget(df.sparkSession)
-        if budget is not None:
-            df = df.coalesce(budget)
+    (FIXTURES.md §2 schema). A pure projection — zero shuffles."""
     udf = make_extract_udf(cfg)
     ex = df.withColumn("_ex", udf(F.col("text")))
     return ex.select(

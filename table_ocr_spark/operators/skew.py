@@ -49,7 +49,6 @@ def effective_skew_threshold(
     df: DataFrame,
     cfg: ExtractorConfig,
     num_partitions: int | None,
-    total: int | None = None,
 ) -> int:
     """Skew threshold relative to the actual per-task row budget.
 
@@ -70,13 +69,12 @@ def effective_skew_threshold(
     thr = cfg.skew_turns_threshold
     if not num_partitions:
         return thr
-    if total is None:
-        total = df.select(F.count(F.lit(1)).alias("n")).first()["n"]
+    total = df.select(F.count(F.lit(1)).alias("n")).first()["n"]
     return max(thr, total // num_partitions // 2)
 
 
 def heavy_conv_ids_materialized(
-    df: DataFrame, threshold: int, cap: int = 10_000, with_counts: bool = False
+    df: DataFrame, threshold: int, cap: int = 10_000
 ) -> list | None:
     """Collect the heavy-hitter conv_id set to the driver ONCE.
 
@@ -88,16 +86,10 @@ def heavy_conv_ids_materialized(
     plain predicate — pushed into the parquet scan, no build side at all.
     Returns None when the set exceeds ``cap`` (adversarial corpus) — the
     caller falls back to the broadcast-join form.
-
-    ``with_counts``: return ``[(conv_id, n_turns), …]`` instead of bare ids
-    (same single sketch job — the count rides the collected rows for free);
-    callers use the counts to size the heavy branch's partition share.
     """
     rows = _heavy_counts(df, threshold).limit(cap + 1).collect()
     if len(rows) > cap:
         return None
-    if with_counts:
-        return [(r.conv_id, r.n_turns) for r in rows]
     return [r.conv_id for r in rows]
 
 
@@ -138,57 +130,31 @@ def salted_repartition(
     sf0.1 bench corpus).  Versus salting everything: shuffle volume drops
     from 100% of the input to exactly the stragglers.
 
-    ``worker_budget`` (oversubscribed local mode only —
-    ``session.python_worker_budget``): size the union's TWO branches so the
-    whole output has AT MOST ``worker_budget`` partitions, split
-    PROPORTIONALLY to each branch's row share.  (At most: the light
-    branch is sized with ``coalesce``, which never widens — if the scan
-    produced fewer partitions than the light share, the output falls
-    short of the budget rather than paying the shuffle a ``repartition``
-    would cost; the heavy branch always repartitions, it shuffles
-    anyway.)  A naive downstream
-    ``coalesce(budget)`` chunks the union's partitions by index, so the
-    light branch's ~94% of bytes lands on half the tasks (measured: salted
-    leg 8.1 → 10.8 s); the proportional split keeps every task near
-    ``total/budget`` rows.  The heavy-row share comes for free from the
-    sketch (``with_counts``) — no extra job.
+    ``worker_budget`` is accepted and ignored: the frozen ``bench.py`` passes it.
     """
     n = num_partitions or cfg.target_partitions
-    total = None
-    if adaptive_threshold or worker_budget:
-        total = df.select(F.count(F.lit(1)).alias("n")).first()["n"]
     thr = (
-        effective_skew_threshold(df, cfg, n or 32, total=total)
+        effective_skew_threshold(df, cfg, n or 32)
         if adaptive_threshold
         else cfg.skew_turns_threshold
     )
-    heavy_counts = heavy_conv_ids_materialized(df, thr, with_counts=True)
-    if heavy_counts is not None:
-        if not heavy_counts:
+    heavy_list = heavy_conv_ids_materialized(df, thr)
+    if heavy_list is not None:
+        if not heavy_list:
             return df  # no stragglers: zero shuffle, scan partitioning stands
-        heavy_list = [c for c, _ in heavy_counts]
         # NULL conv_id: `isin` yields NULL, which a bare `~is_heavy` filter
         # drops — coalesce to False so null-keyed rows stay light-branch
         # (mirrors pipeline._salted_bucketed's when/otherwise form)
         is_heavy = F.coalesce(F.col("conv_id").isin(heavy_list), F.lit(False))
         light_rows = df.filter(~is_heavy)
         heavy_rows = df.filter(is_heavy)
-        heavy_total = sum(c for _, c in heavy_counts)
     else:  # adversarial: too many heavy convs to inline — broadcast join
         heavy = skewed_conv_ids(df, thr)
         light_rows = df.join(F.broadcast(heavy), "conv_id", "left_anti")
         heavy_rows = df.join(F.broadcast(heavy), "conv_id", "left_semi")
-        heavy_total = None  # share unknown without an extra job → no split
     heavy_rows = heavy_rows.withColumn(
         "_salt", F.pmod(F.col("turn_idx"), F.lit(cfg.salt_buckets))
     )
-    if worker_budget and worker_budget >= 2 and heavy_total is not None and total:
-        b_heavy = min(
-            max(1, round(worker_budget * heavy_total / total)), worker_budget - 1
-        )
-        b_light = worker_budget - b_heavy
-        heavy_balanced = heavy_rows.repartition(b_heavy, "conv_id", "_salt")
-        return light_rows.coalesce(b_light).unionByName(heavy_balanced.drop("_salt"))
     if n:
         heavy_balanced = heavy_rows.repartition(n, "conv_id", "_salt")
     else:

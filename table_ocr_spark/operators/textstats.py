@@ -306,16 +306,6 @@ def top_bigram_share_col(text: str = "text") -> Column:
     )
 
 
-def with_textstats(df: DataFrame, text: str = "text") -> DataFrame:
-    return (
-        df.withColumn("n_tokens", token_count_col(text))
-        .withColumn("lang_id", lang_id_col(text))
-        .withColumn("stopword_ratio", stopword_ratio_col(text))
-        .withColumn("quality_score", quality_score_col(text))
-        .withColumn("fingerprint", fingerprint_col(text))
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     token_col: str = "n_tokens",

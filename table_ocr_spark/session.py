@@ -154,28 +154,5 @@ def job_session(app_name: str, cores: int | None = None) -> Iterator[SparkSessio
 
 
 def python_worker_budget(spark: SparkSession) -> int | None:
-    """Concurrent-Python-worker cap for Arrow-UDF stages, or None for no cap.
-
-    History of this policy: in round 1 the (then string-heavy) extraction
-    kernel made local[32] collapse into kernel-side contention (system CPU
-    65-95%, flagship 5.39 s at local[16] vs 13.75 s at local[32]), so the
-    budget capped UDF-stage concurrency at host/2 by shrinking the stage's
-    partition count.  Rounds 4-7 cut the Python worker's per-row CPU ~3×
-    (shingle-free hashing upstream, kernel fast paths), and re-measurement
-    on the same 32-vCPU host now shows the OPPOSITE: with the lean kernel
-    the cap serializes work the host can absorb — flagship 3.76 s capped
-    at 16 vs 2.70 s uncapped, salted 5.5 s vs 3.5 s (round 7, min-of-3,
-    local[32]).  The oversubscription cliff the cap guarded against is
-    gone, so the default is now NO cap; the mechanism stays for callers
-    (and hosts) that need one, via ``SPARK_GRAFT_WORKER_BUDGET`` — a
-    cluster submit would instead own this through executor-core sizing /
-    stage-level resource profiles, where it belongs.
-    """
-    env = os.environ.get("SPARK_GRAFT_WORKER_BUDGET", "")
-    if env:
-        try:
-            v = int(env)
-        except ValueError:
-            return None
-        return v if v > 0 else None
+    """Always None (no cap); kept because the frozen ``bench.py`` imports it."""
     return None

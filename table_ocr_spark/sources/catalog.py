@@ -27,7 +27,6 @@ store (ttocr/api/database.py:26-65) + per-run mlflow artifact trail
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
@@ -119,11 +118,6 @@ def write_transcripts_jsonl(pdf, path: str, n_files: int = 4) -> None:
         chunk.to_json(
             f"{path}/part-{i//n:05d}.jsonl", orient="records", lines=True, force_ascii=False
         )
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-provided TPC-H-ish tables (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 class ExtractionTable:
@@ -225,10 +219,3 @@ class ExtractionTable:
         os.makedirs(self.config_dir, exist_ok=True)
         with open(os.path.join(self.config_dir, f"{config_hash}.json"), "w") as f:
             f.write(cfg_json)
-
-    def read_config(self, config_hash: str) -> Optional[dict]:
-        p = os.path.join(self.config_dir, f"{config_hash}.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)

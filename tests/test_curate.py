@@ -616,6 +616,11 @@ def test_curate_incremental_processes_only_appended_files(spark, tmp_path, monke
     # run 3: no new input → metadata-only no-op, history unchanged
     assert C.main(args) == 0
     assert [e["seq"] for e in out_table.history()] == [1, 2]
+    # ...and the sidecar still reports the run
+    summary = json.loads((tmp_path / "out" / "_curation_summary.json").read_text())
+    assert summary["no_new_input"] is True
+    assert summary["rows_in"] == 0
+    assert summary["input_seq_processed"] == 2
 
 
 def test_curate_incremental_near_dedup_against_history(spark, tmp_path, monkeypatch):

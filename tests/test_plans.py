@@ -329,44 +329,6 @@ def test_pack_sequences_single_bucket_shuffle_no_global_sort(spark):
     assert "rangepartitioning" not in plan.lower(), plan
 
 
-def test_salted_proportional_split_balances_tasks(spark, tmp_path_factory):
-    """The worker_budget form must spread rows ~evenly over exactly
-    `budget` partitions: a naive coalesce(budget) of the union would land
-    the light branch's ~94% of bytes on half the tasks.  Asserted on a
-    skewed corpus: no partition holds more than 2x the mean."""
-    from table_ocr_spark import synth
-    from table_ocr_spark.config import ExtractorConfig
-    from table_ocr_spark.operators.skew import salted_repartition
-    from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA, write_transcripts_parquet
-
-    p = str(tmp_path_factory.mktemp("salt_bal"))
-    # enough files that coalesce(b_light) has units to merge (coalesce
-    # can only merge, never split, scan partitions), and enough heavy
-    # conversations that hash granularity of (conv, salt) groups
-    # averages out over the heavy partitions
-    write_transcripts_parquet(synth.gen_pandas(200, seed=7, max_long=2000), p, n_files=16)
-    src = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(p).select(
-        "conv_id", "turn_idx", "text"
-    )
-    budget = 8
-    cfg = ExtractorConfig(skew_turns_threshold=100)
-    out = salted_repartition(
-        src, cfg=cfg, num_partitions=budget, adaptive_threshold=False,
-        worker_budget=budget,
-    )
-    sizes = [
-        r.n
-        for r in out.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ]
-    assert len(sizes) <= budget
-    total = sum(sizes)
-    assert total == src.count()
-    mean = total / budget
-    assert max(sizes) <= 2 * mean, sizes
-
-
 def test_star_lsh_single_signature_pass(spark):
     """Star-form candidates: the pivot and the hot-bucket cap are WINDOWS
     on the pinned (band, bucket) repartition — exactly ONE
@@ -445,8 +407,10 @@ def test_session_lifecycle_calls_only_in_session_helpers():
     """Outside ``table_ocr_spark/session.py``, no module in the package or
     ``jobs/`` builds a frame from Python rows (``local_frame`` does),
     persists a frame (``persist`` does, so a job in a borrowed session can
-    unpersist it) or stops a session (``job_session`` does, and only one
-    it started)."""
+    unpersist it), stops a session (``job_session`` does, and only one
+    it started) or reads the environment (``build_session`` does: every
+    engine setting is an argument or Spark conf, never a hidden env
+    knob)."""
     import ast
     import pathlib
 
@@ -468,6 +432,10 @@ def test_session_lifecycle_calls_only_in_session_helpers():
                 if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     walk(child, child.name)
                     continue
+                if isinstance(child, ast.Attribute) and child.attr in ("environ", "getenv") \
+                        and isinstance(child.value, ast.Name) and child.value.id == "os" \
+                        and not (in_session and fn == "build_session"):
+                    bad.append(f"{path.relative_to(root)}:{child.lineno} os.{child.attr}")
                 f = getattr(child, "func", None)
                 if isinstance(child, ast.Call) and isinstance(f, ast.Attribute) \
                         and f.attr in owner \
