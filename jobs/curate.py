@@ -68,6 +68,8 @@ import argparse
 import json
 import os
 import sys
+from dataclasses import dataclass
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -75,6 +77,142 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 class _ConcurrentIncrement(Exception):
     """A concurrent incremental run already committed this input seq —
     appending again would duplicate the increment."""
+
+
+def turn_key():
+    """The composite turn key ``conv_id#turn_idx`` — the one string key
+    every turn-level join (near-dedup, decontamination, quota ids, the
+    turn LSH index and its forget scrub) uses."""
+    from pyspark.sql import functions as F
+
+    return F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
+
+
+def _turn_keyed(rows):
+    return rows.withColumn("_k", turn_key())
+
+
+def _conv_units(rows):
+    from table_ocr_spark.operators.conv_scope import conv_text
+
+    return conv_text(rows.select("conv_id", "turn_idx", "text"))
+
+
+@dataclass(frozen=True)
+class LshIndex:
+    """One near-dedup granularity and its persisted LSH band index: a
+    snapshot-log sidecar ``<output>/<dir>`` of (key, band, bucket) rows,
+    one per indexed unit per band, that later increments equi-join
+    instead of re-banding the history's text.  Compaction clusters the
+    index by ``key``.
+
+    ``keyed(rows)`` adds ``key`` to curated rows; ``assemble(keyed)``
+    builds one (key, text) unit per key from several rows, or is None
+    when every row is its own unit.  ``catchup_full_reband``: units can
+    grow between syncs, so a catch-up across a compaction re-bands the
+    live set (see ``_sync_index``).  ``tag`` names the summary keys:
+    ``compacted_<tag>_seq`` (curate), ``<tag>_seq`` and
+    ``expired_<tag>`` (forget)."""
+
+    dir: str
+    tag: str
+    key: str
+    keyed: Callable
+    assemble: Callable | None
+    catchup_full_reband: bool
+
+    def table(self, root: str):
+        from table_ocr_spark.sources.snapshots import SnapshotTable
+
+        return SnapshotTable(os.path.join(root, self.dir))
+
+    def units(self, keyed):
+        return keyed if self.assemble is None else self.assemble(keyed)
+
+
+# one row per turn, keyed by the turn key
+TURN_INDEX = LshIndex("lsh_index", "index", "_k", _turn_keyed, None, False)
+# one row per conversation, re-assembled in turn order (``conv_text``) —
+# a few bytes regardless of conversation length.  A conversation whose
+# turns span increments gets one banding generation per increment (each
+# reflecting that increment's turns) — conservative: extra index rows
+# can only ADD candidates, and the exact Jaccard verify decides.
+CONV_INDEX = LshIndex(
+    "conv_lsh_index", "conv_index", "conv_id", lambda rows: rows, _conv_units, True
+)
+INDEXES = (TURN_INDEX, CONV_INDEX)
+
+
+def _near_dedup_batch(rows, idx: LshIndex, threshold, cap, rounds=1, all_pairs=False):
+    """Within-batch near-dedup of ``rows`` at ``idx``'s granularity:
+    MinHash-LSH candidates (star form, or all-pairs with ``all_pairs``)
+    → exact word-Jaccard verify on candidates only → connected
+    components → keep the component-min unit; every row of a dropped
+    unit goes with it.  Returns ``rows``' columns.
+
+    Rounds after the first re-bucket the survivors with a rotated
+    (salted-argmin) star pivot, so they need per-row units (the turn
+    granularity); an assembled granularity runs one round."""
+    from table_ocr_spark.operators.dedup import (
+        dedup_near_representatives,
+        minhash_lsh_pairs,
+        minhash_lsh_star_pairs,
+        verify_pairs_jaccard,
+    )
+    from table_ocr_spark.session import persist
+
+    keyed = idx.keyed(rows)
+    if idx.assemble is None:
+        # referenced by the LSH build, both verify text joins, and the
+        # final anti-join — persist or the exact-dedup semi-join subtree
+        # executes four times
+        keyed = units = persist(keyed)
+    else:
+        # referenced by the LSH banding and both verify text joins —
+        # without a persist the whole collect-per-conv (and the
+        # extraction chain under it) executes three times
+        units = persist(idx.assemble(keyed))
+    # materialize ONCE before the CC loop's eager checkpoints: an
+    # Observation attached upstream (rows_in / rows_kept) completes
+    # on the FIRST action that contains its node, and when the LSH
+    # candidate set is empty AQE's empty-relation fold can eliminate
+    # the CollectMetrics node from a checkpoint action's plan — the
+    # observation then completes with a null row and Observation.get
+    # raises (reproduced with a corpus yielding zero candidates).
+    # This clean full pass completes the observations with correct
+    # values and warms the cache every downstream branch shares.
+    units.count()
+    surv = keyed
+    pend: list = []  # persisted survivor frames not yet droppable
+    for r in range(rounds):
+        if all_pairs:
+            cand = minhash_lsh_pairs(units, "text", idx.key, max_bucket_size=cap)
+        else:
+            cand = minhash_lsh_star_pairs(
+                units,
+                "text",
+                idx.key,
+                max_bucket_size=cap,
+                pivot_salt=str(r) if r else "",
+            )
+        pairs = verify_pairs_jaccard(
+            cand, units, text="text", key=idx.key, threshold=threshold
+        )
+        # the CC inside runs EAGERLY (checkpointed edges) — once
+        # it has materialized through this round's surv, the
+        # frame persisted two rounds back is recompute-bounded
+        # (checkpoint-cut drops + cached keyed rows) and can go;
+        # holding every round's cache would pin O(rounds)
+        # corpus-sized entries at the 100 TB design point
+        surv = dedup_near_representatives(surv, pairs, key=idx.key)
+        if len(pend) >= 2:
+            pend.pop(0).unpersist(False)
+        if r + 1 < rounds:
+            # next round references the survivor frame from four
+            # branches (banding, both verify sides, anti-join)
+            surv = units = persist(surv)
+            pend.append(surv)
+    return surv.select(*rows.columns)
 
 
 def build_curated(
@@ -186,37 +324,9 @@ def build_curated(
         # the re-upload into orphan edited-turn fragments instead of
         # dropping the conversation as a unit (the failure this stage
         # closes).  Whole convs re-assemble in turn order (one partial-
-        # aggregated collect per conv), MinHash-LSH star candidates over
-        # the conv texts (O(n) per bucket), exact word-Jaccard verify on
-        # candidates only, connected components, keep the component-min
-        # conversation; every turn of a dropped conv goes with it.
-        from table_ocr_spark.operators.conv_scope import conv_text
-        from table_ocr_spark.operators.dedup import (
-            minhash_lsh_star_pairs,
-            near_dup_components,
-            verify_pairs_jaccard,
-        )
-
-        # referenced by the LSH banding and both verify text joins —
-        # without a persist the whole collect-per-conv (and the
-        # extraction chain under it) executes three times
-        conv = persist(conv_text(kept.select("conv_id", "turn_idx", "text")))
-        # materialize once before the CC loop's eager checkpoints: same
-        # AQE empty-relation/Observation hazard documented at the
-        # turn-level near-dedup's with_k.count() below
-        conv.count()
-        cand = minhash_lsh_star_pairs(
-            conv, "text", "conv_id", max_bucket_size=near_dup_cap
-        )
-        pairs = verify_pairs_jaccard(
-            cand, conv, text="text", key="conv_id",
-            threshold=conv_near_dup_threshold,
-        )
-        comps = near_dup_components(pairs)
-        drop = comps.filter(F.col("member") != F.col("component")).select(
-            F.col("member").alias("conv_id")
-        )
-        kept = kept.join(drop, "conv_id", "left_anti")
+        # aggregated collect per conv); star candidates over the conv
+        # texts stay O(n) per bucket.
+        kept = _near_dedup_batch(kept, CONV_INDEX, conv_near_dup_threshold, near_dup_cap)
 
     # exact dedup, representative = min (conv_id, turn_idx) per fingerprint:
     # aggregate ONLY (fingerprint, min-key) — map-side combined, narrow —
@@ -240,83 +350,25 @@ def build_curated(
     deduped = kept.join(reps, ["fingerprint", "conv_id", "turn_idx"], "left_semi")
     if near_dup_threshold is not None:
         # fuzzy dedup (RefinedWeb/Dolma-style), AFTER exact dedup so the
-        # LSH stage never hashes byte-identical copies: MinHash band
-        # buckets → candidate pairs (hot buckets capped — boilerplate
-        # can't go O(n²)) → exact word-Jaccard verify on candidates only
-        # → connected components → keep the component-min representative.
-        # Every join is keyed by the narrow composite turn key; the full
-        # text shuffles only for the candidate-pair verify projections.
-        from table_ocr_spark.operators.dedup import (
-            dedup_near_representatives,
-            minhash_lsh_pairs,
-            minhash_lsh_star_pairs,
-            verify_pairs_jaccard,
-        )
-
-        with_k = deduped.withColumn(
-            "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-        )
-        # referenced by the LSH build, both verify text joins, and the
-        # final anti-join — persist or the exact-dedup semi-join subtree
-        # executes four times
-        with_k = persist(with_k)
-        # materialize ONCE before the CC loop's eager checkpoints: an
-        # Observation attached upstream (rows_in / rows_kept) completes
-        # on the FIRST action that contains its node, and when the LSH
-        # candidate set is empty AQE's empty-relation fold can eliminate
-        # the CollectMetrics node from a checkpoint action's plan — the
-        # observation then completes with a null row and Observation.get
-        # raises (reproduced with a corpus yielding zero candidates).
-        # This clean full pass completes the observations with correct
-        # values and warms the cache every downstream branch shares.
-        with_k.count()
-        # star is the SCALE default: templated corpora make hundreds of
+        # LSH stage never hashes byte-identical copies; hot buckets are
+        # capped so boilerplate can't go O(n²).  Every join is keyed by
+        # the narrow composite turn key; the full text shuffles only for
+        # the candidate-pair verify projections.  Star is the SCALE default: templated corpora make hundreds of
         # 100-5000-member buckets whose all-pairs explosion stalls the
         # verify stage (measured: 33.5M pairs under cap 1000 at sf0.1 —
         # hours; star emits <1M).  `pairs` keeps the exact all-pairs form
-        # for small corpora.
-        if near_dup_mode == "star":
-            # iterated star: round 1 anchors each bucket at its min key;
-            # each further round re-buckets the SURVIVORS with a rotated
-            # (salted-argmin) pivot, so member pairs that both missed an
-            # earlier anchor get a new one to meet through.  Every round
-            # is O(n) per bucket; measured at sf0.01, round 2 closes most
-            # of the star-vs-all-pairs recall gap (BENCH/CURATE.md).
-            surv = with_k
-            rounds = max(1, near_dup_rounds)
-            pend: list = []  # persisted survivor frames not yet droppable
-            for r in range(rounds):
-                cand = minhash_lsh_star_pairs(
-                    surv,
-                    "text",
-                    "_k",
-                    max_bucket_size=near_dup_cap,
-                    pivot_salt=str(r) if r else "",
-                )
-                pairs = verify_pairs_jaccard(
-                    cand, surv, text="text", key="_k", threshold=near_dup_threshold
-                )
-                # the CC inside runs EAGERLY (checkpointed edges) — once
-                # it has materialized through this round's surv, the
-                # frame persisted two rounds back is recompute-bounded
-                # (checkpoint-cut drops + cached with_k) and can go;
-                # holding every round's cache would pin O(rounds)
-                # corpus-sized entries at the 100 TB design point
-                surv = dedup_near_representatives(surv, pairs, key="_k")
-                if len(pend) >= 2:
-                    pend.pop(0).unpersist(False)
-                if r + 1 < rounds:
-                    # next round references the survivor frame from four
-                    # branches (banding, both verify sides, anti-join)
-                    surv = persist(surv)
-                    pend.append(surv)
-            deduped = surv.drop("_k")
-        else:
-            cand = minhash_lsh_pairs(with_k, "text", "_k", max_bucket_size=near_dup_cap)
-            pairs = verify_pairs_jaccard(
-                cand, with_k, text="text", key="_k", threshold=near_dup_threshold
-            )
-            deduped = dedup_near_representatives(with_k, pairs, key="_k").drop("_k")
+        # for small corpora, in one round.  Iterated star: round 1 anchors
+        # each bucket at its min key; each further round re-buckets the
+        # SURVIVORS with a rotated (salted-argmin) pivot, so member pairs
+        # that both missed an earlier anchor get a new one to meet
+        # through.  Every round is O(n) per bucket; measured at sf0.01,
+        # round 2 closes most of the star-vs-all-pairs recall gap
+        # (BENCH/CURATE.md).
+        all_pairs = near_dup_mode == "pairs"
+        rounds = 1 if all_pairs else max(1, near_dup_rounds)
+        deduped = _near_dedup_batch(
+            deduped, TURN_INDEX, near_dup_threshold, near_dup_cap, rounds, all_pairs
+        )
     deduped = deduped.withColumn("split", dataset_split_col("fingerprint"))
     if eval_df is not None:
         # benchmark-leak guard: drop any curated row sharing an n-token
@@ -329,18 +381,11 @@ def build_curated(
         # from two branches of one action.
         from table_ocr_spark.operators.decontam import contaminated_keys
 
-        with_key = kept.withColumn(
-            "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-        )
         bad = contaminated_keys(
-            with_key, eval_df, text="text", key="_k", n=decontam_n
+            kept.withColumn("_k", turn_key()), eval_df, text="text", key="_k", n=decontam_n
         ).withColumnRenamed("k", "_k")
         deduped = (
-            deduped.withColumn(
-                "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-            )
-            .join(bad, "_k", "left_anti")
-            .drop("_k")
+            deduped.withColumn("_k", turn_key()).join(bad, "_k", "left_anti").drop("_k")
         )
     if max_turns_per_conv:
         # per-conversation quota: a 100k-turn agent loop shouldn't dominate
@@ -350,10 +395,7 @@ def build_curated(
         from table_ocr_spark.operators.sampling import cap_per_key
 
         deduped = cap_per_key(
-            deduped.withColumn(
-                "_cap_id",
-                F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")),
-            ),
+            deduped.withColumn("_cap_id", turn_key()),
             "conv_id",
             [F.col("quality").desc()],
             id_col="_cap_id",
@@ -370,25 +412,20 @@ def build_curated(
     return deduped
 
 
-def _sync_banded_index(
-    spark, out_table, index_table, band_fn, key_fn, catchup_full_reband=False
-):
-    """Bring an LSH-index sidecar table up to the curated data table's
-    current seq: band ONLY the data increments the index does not cover
-    yet (``read_changes`` — zero reads of already-indexed files) and
+def _sync_index(spark, out_table, index_table, idx: LshIndex):
+    """Bring ``idx``'s LSH-index sidecar table up to the curated data
+    table's current seq: band ONLY the data increments the index does not
+    cover yet (``read_changes`` — zero reads of already-indexed files) and
     append them with the covered data seq in the commit summary.
 
-    ``band_fn(rows) -> (key, band, bucket)`` defines the indexed
-    granularity (per-turn text or per-conversation text); ``key_fn(rows)
-    -> rows + key column`` names the unit for the compact-catch-up
-    anti-join.  Idempotent and crash-healing: a run that died between
-    its data append and its index append leaves the index behind by one
-    seq, and the next run's sync closes the gap before using the
-    index — the index can lag (briefly missing candidates) but never
-    lies.  Indexes are stamped with the hash-algorithm tag; a mismatch
-    (or legacy untagged index) forces a full rebuild instead of
-    silently never colliding with fresh buckets."""
-    from table_ocr_spark.operators.dedup import LSH_ALGO
+    Idempotent and crash-healing: a run that died between its data
+    append and its index append leaves the index behind by one seq, and
+    the next run's sync closes the gap before using the index — the
+    index can lag (briefly missing candidates) but never lies.  Indexes
+    are stamped with the hash-algorithm tag; a mismatch (or legacy
+    untagged index) forces a full rebuild instead of silently never
+    colliding with fresh buckets."""
+    from table_ocr_spark.operators.dedup import LSH_ALGO, lsh_banded
 
     cur = out_table.current_seq()
     if cur is None:
@@ -404,8 +441,14 @@ def _sync_banded_index(
         return
     stamp = lambda: {"data_seq": cur, "lsh_algo": LSH_ALGO}  # noqa: E731
 
+    def band(keyed):
+        return lsh_banded(idx.units(keyed), text="text", key=idx.key)
+
+    def live():
+        return idx.keyed(out_table.read(spark))
+
     if not algo_ok:
-        index_table.overwrite(band_fn(out_table.read(spark)), summary=stamp())
+        index_table.overwrite(band(live()), summary=stamp())
         return
 
     try:
@@ -424,20 +467,17 @@ def _sync_banded_index(
         if index_table.current_seq() is None:
             # first-time index bootstrap against a table whose history
             # already contains non-append commits: band the live set
-            index_table.append(band_fn(out_table.read(spark)), summary=stamp())
+            index_table.append(band(live()), summary=stamp())
             return
         if ops <= {"append", "compact"}:
-            if catchup_full_reband:
-                if "append" not in ops:
-                    # compact-only range: layout changed, rows did not —
-                    # no conv can have gained turns, so skip the
-                    # O(corpus) re-band + index anti-join and take the
-                    # same metadata-only seq catch-up as the turn path
-                    index_table.append(
-                        band_fn(out_table.read(spark).limit(0)),
-                        summary=stamp(),
-                    )
-                    return
+            if "append" not in ops:
+                # compact-only range: compaction rewrites file LAYOUT
+                # but preserves every row, so no unit can be missing
+                # or have gained rows — skip the O(corpus) re-band and
+                # index anti-join and take a metadata-only seq catch-up
+                index_table.append(band(live().limit(0)), summary=stamp())
+                return
+            if idx.catchup_full_reband:
                 # conversation granularity: a conv already in the index
                 # may have gained NEW turns inside the uncovered range —
                 # a bare-key anti-join would skip it and leave its bands
@@ -447,7 +487,7 @@ def _sync_banded_index(
                 # anti-join): unchanged convs collapse to zero new rows,
                 # grown convs gain a fresh generation, prior generations
                 # are preserved (extra rows only ADD candidates).
-                fresh = band_fn(out_table.read(spark))
+                fresh = band(live())
                 existing = index_table.read(spark).select(*fresh.columns)
                 index_table.append(
                     fresh.join(existing, list(fresh.columns), "left_anti"),
@@ -455,80 +495,91 @@ def _sync_banded_index(
                 )
                 return
             # turn granularity: a turn's text is immutable, so the cheap
-            # key-level anti-join is exact.  Compaction rewrites file
-            # LAYOUT but preserves every row, so file-diff change
-            # tracking is void while row coverage is not: band only the
-            # live rows whose key the index lacks (for a compact-only
-            # range that is zero rows — a metadata-only seq catch-up)
-            live, key_col = key_fn(out_table.read(spark))
-            unindexed = live.join(
-                index_table.read(spark).select(key_col).distinct(),
-                key_col,
+            # key-level anti-join is exact.  File-diff change tracking is
+            # void across a compaction while row coverage is not: band
+            # only the live rows whose key the index lacks
+            unindexed = live().join(
+                index_table.read(spark).select(idx.key).distinct(),
+                idx.key,
                 "left_anti",
             )
-            index_table.append(band_fn(unindexed), summary=stamp())
+            index_table.append(band(unindexed), summary=stamp())
             return
         # a row-REMOVING commit (forget-merge, rollback) sits between the
         # covered seq and HEAD — rebuild the index from the live table:
         # one banding pass over the surviving corpus (no text
         # re-extraction), committed as an overwrite so forgotten rows'
         # derived bands drop out of the live index too
-        index_table.overwrite(band_fn(out_table.read(spark)), summary=stamp())
+        index_table.overwrite(band(live()), summary=stamp())
         return
-    index_table.append(band_fn(rows), summary=stamp())
+    index_table.append(band(idx.keyed(rows)), summary=stamp())
 
 
-def _sync_lsh_index(spark, out_table, index_table, k=8, bands=4, shingle_n=2):
-    """Turn-granularity LSH index sync: one (key=_conv#turn_, band,
-    bucket) row per turn per band (see ``_sync_banded_index``)."""
+def _dedup_against_history(spark, curated, out_table, idx: LshIndex, threshold, args):
+    """Cross-increment near-dedup of ``curated`` at ``idx``'s
+    granularity via its persisted LSH band index: history participates
+    as (key, band, bucket) rows — a few bytes per unit per band — so each
+    run bands ONLY the increment's units, equi-joins them against the
+    index, verifies exact Jaccard on candidates (old units rebuilt from
+    the curated table for CANDIDATE keys only, key-pruned semi-join), and
+    drops every increment row whose unit near-matches history (the
+    committed representative wins — rerun-stable by design).  The index
+    is synced to the data table first."""
     from pyspark.sql import functions as F
 
-    from table_ocr_spark.operators.dedup import lsh_banded
-
-    def _key(rows):
-        return (
-            rows.withColumn(
-                "_k",
-                F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")),
-            ),
-            "_k",
-        )
-
-    def _band(rows):
-        with_k = rows.select(
-            F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")).alias("_k"),
-            "text",
-        )
-        return lsh_banded(
-            with_k, text="text", key="_k", k=k, bands=bands, shingle_n=shingle_n
-        )
-
-    _sync_banded_index(spark, out_table, index_table, _band, _key)
-
-
-def _sync_conv_lsh_index(spark, out_table, index_table, k=8, bands=4, shingle_n=2):
-    """CONVERSATION-granularity LSH index sync: whole convs re-assembled
-    in turn order (``conv_text``) and banded — one (conv_id, band,
-    bucket) row per conv per band, a few bytes regardless of
-    conversation length.  A conversation whose turns span increments
-    gets one banding generation per increment (each reflecting that
-    increment's turns) — conservative: extra index rows can only ADD
-    candidates, and the exact Jaccard verify decides."""
-    from table_ocr_spark.operators.conv_scope import conv_text
-    from table_ocr_spark.operators.dedup import lsh_banded
-
-    def _key(rows):
-        return rows, "conv_id"
-
-    def _band(rows):
-        conv = conv_text(rows.select("conv_id", "turn_idx", "text"))
-        return lsh_banded(
-            conv, text="text", key="conv_id", k=k, bands=bands, shingle_n=shingle_n
-        )
-
-    _sync_banded_index(
-        spark, out_table, index_table, _band, _key, catchup_full_reband=True
+    from table_ocr_spark.operators.dedup import (
+        lsh_pairs_against,
+        verify_pairs_jaccard,
     )
+    from table_ocr_spark.session import persist
+
+    index_table = idx.table(args.output)
+    _sync_index(spark, out_table, index_table, idx)
+    if index_table.current_seq() is None:
+        return curated
+    key = idx.key
+    # referenced by the candidate build, the verify text join, and the
+    # final anti-join — uncached, the whole extract→score→dedup chain
+    # would execute three times
+    keyed = persist(idx.keyed(curated))
+    # assembled units are themselves referenced twice (LSH banding + the
+    # verify text side) — persist, or the collect-per-conv aggregation
+    # runs twice even over the cached keyed frame
+    new = keyed if idx.assemble is None else persist(idx.assemble(keyed))
+    cand = lsh_pairs_against(
+        new,
+        index_table.read(spark),
+        text="text",
+        key=key,
+        max_bucket_size=args.near_dedup_cap,
+        max_candidates_per_bucket=args.near_dedup_candidates,
+    )
+    old = idx.units(
+        idx.keyed(out_table.read(spark)).join(
+            cand.select(F.col("key_old").alias(key)).distinct(), key, "left_semi"
+        )
+    )
+    # the verify text frame holds BOTH sides, and a re-ingested key can
+    # exist on both (the exact anti-join passes a (conv, turn) whose text
+    # was rewritten) — an unprefixed union would fan the verify join out
+    # to new-vs-new (jaccard 1.0, spurious self-drop).  Side prefixes
+    # make every key unique: each candidate verifies NEW text against OLD
+    # text, so a rewritten re-ingest is dropped only if it genuinely
+    # near-matches its history version.
+    pairs = verify_pairs_jaccard(
+        cand.select(
+            F.concat(F.lit("n#"), "key_new").alias("key_a"),
+            F.concat(F.lit("o#"), "key_old").alias("key_b"),
+        ),
+        new.select(F.concat(F.lit("n#"), key).alias(key), "text").unionByName(
+            old.select(F.concat(F.lit("o#"), key).alias(key), "text")
+        ),
+        text="text",
+        key=key,
+        threshold=threshold,
+    )
+    drop = pairs.select(F.expr("substring(key_a, 3)").alias(key)).distinct()
+    return keyed.join(drop, key, "left_anti").select(*curated.columns)
 
 
 def main(argv=None) -> int:
@@ -678,7 +729,6 @@ def _curate(spark, args, cfg, langs: list) -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from table_ocr_spark.session import persist
     from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA
 
     def _report(summary: dict) -> int:
@@ -761,69 +811,14 @@ def _curate(spark, args, cfg, langs: list) -> int:
         corpus_strip_min_df=args.strip_corpus_min_df or None,
     )
     if out_table is not None and args.conv_near_dedup:
-        # cross-increment CONVERSATION near-dedup via a persisted
-        # conv-granularity LSH band index (conv_lsh_index sidecar):
-        # history participates as one (conv_id, band, bucket) row per
-        # conv per band — a few bytes regardless of conversation
-        # length — so each run re-assembles and hashes ONLY the
-        # increment's conversations.  Candidates equi-join the index;
-        # old conv texts are re-assembled for CANDIDATE convs only
-        # (key-pruned semi-join); side-prefixed keys make a re-ingested
-        # conv id verify new-vs-old text, never new-vs-new (the same
-        # self-pair hazard as the turn-level block above).  An increment
-        # conv near-matching history drops whole — the committed
-        # representative wins, rerun-stable.
-        from table_ocr_spark.operators.conv_scope import conv_text
-        from table_ocr_spark.operators.dedup import (
-            lsh_pairs_against,
-            verify_pairs_jaccard,
+        # cross-increment CONVERSATION near-dedup, before the exact
+        # anti-join for the same reason the within-batch conv stage runs
+        # before turn dedup: each run re-assembles and hashes ONLY the
+        # increment's conversations, and an increment conv near-matching
+        # history drops whole
+        curated = _dedup_against_history(
+            spark, curated, out_table, CONV_INDEX, args.conv_near_dedup, args
         )
-        from table_ocr_spark.sources.snapshots import SnapshotTable
-
-        conv_idx_table = SnapshotTable(os.path.join(args.output, "conv_lsh_index"))
-        _sync_conv_lsh_index(spark, out_table, conv_idx_table)
-        if conv_idx_table.current_seq() is not None:
-            # referenced by the conv re-assembly AND the final anti-join —
-            # uncached, the whole upstream chain executes twice
-            curated = persist(curated)
-            # conv_new is itself referenced twice (LSH banding + the
-            # verify text side) — persist, or the collect-per-conv
-            # aggregation runs twice even over the cached curated frame
-            conv_new = persist(conv_text(curated.select("conv_id", "turn_idx", "text")))
-            cand = lsh_pairs_against(
-                conv_new,
-                conv_idx_table.read(spark),
-                text="text",
-                key="conv_id",
-                max_bucket_size=args.near_dedup_cap,
-                max_candidates_per_bucket=args.near_dedup_candidates,
-            )
-            old_rows = out_table.read(spark).join(
-                cand.select(F.col("key_old").alias("conv_id")).distinct(),
-                "conv_id",
-                "left_semi",
-            )
-            conv_old = conv_text(old_rows.select("conv_id", "turn_idx", "text"))
-            pairs = verify_pairs_jaccard(
-                cand.select(
-                    F.concat(F.lit("n#"), "key_new").alias("key_a"),
-                    F.concat(F.lit("o#"), "key_old").alias("key_b"),
-                ),
-                conv_new.select(
-                    F.concat(F.lit("n#"), "conv_id").alias("conv_id"), "text"
-                ).unionByName(
-                    conv_old.select(
-                        F.concat(F.lit("o#"), "conv_id").alias("conv_id"), "text"
-                    )
-                ),
-                text="text",
-                key="conv_id",
-                threshold=args.conv_near_dedup,
-            )
-            drop = pairs.select(
-                F.expr("substring(key_a, 3)").alias("conv_id")
-            ).distinct()
-            curated = curated.join(drop, "conv_id", "left_anti")
 
     if out_table is not None and out_table.current_seq() is not None:
         # cross-increment exact dedup: a new row whose content already
@@ -836,76 +831,9 @@ def _curate(spark, args, cfg, langs: list) -> int:
         curated = curated.join(prev_fp, "fingerprint", "left_anti")
 
     if out_table is not None and args.near_dedup:
-        # cross-increment NEAR-dedup via the persisted LSH band index:
-        # history participates as (key, band, bucket) rows — a few bytes
-        # per doc per band — so each run shingles/hashes ONLY the
-        # increment, equi-joins its bands against the index, verifies
-        # exact Jaccard on candidates (old texts fetched key-pruned from
-        # the curated table), and drops new rows near-matching history
-        # (the existing representative wins — rerun-stable by design).
-        from table_ocr_spark.operators.dedup import (
-            lsh_pairs_against,
-            verify_pairs_jaccard,
+        curated = _dedup_against_history(
+            spark, curated, out_table, TURN_INDEX, args.near_dedup, args
         )
-        from table_ocr_spark.sources.snapshots import SnapshotTable
-
-        idx_table = SnapshotTable(os.path.join(args.output, "lsh_index"))
-        _sync_lsh_index(spark, out_table, idx_table)
-        if idx_table.current_seq() is not None:
-            with_k = persist(curated.withColumn(
-                "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-            ))
-            # persist: referenced by the candidate build, the verify text
-            # join, and the final anti-join — uncached, the whole
-            # extract→score→dedup chain would execute three times
-            cand = lsh_pairs_against(
-                with_k,
-                idx_table.read(spark),
-                text="text",
-                key="_k",
-                max_bucket_size=args.near_dedup_cap,
-                max_candidates_per_bucket=args.near_dedup_candidates,
-            )
-            # the verify text frame holds BOTH sides, and a re-ingested
-            # (conv, turn) key can exist on both (the exact anti-join
-            # passes it when its text was rewritten) — an unprefixed
-            # union would fan the verify join out to new-vs-new (jaccard
-            # 1.0, spurious self-drop).  Side prefixes make every key
-            # unique: each candidate verifies NEW text against OLD text,
-            # so a rewritten re-ingest is dropped only if it genuinely
-            # near-matches its history version.
-            old_texts = (
-                out_table.read(spark)
-                .select(
-                    F.concat_ws(
-                        "#", "conv_id", F.col("turn_idx").cast("string")
-                    ).alias("_k0"),
-                    "text",
-                )
-                .join(
-                    cand.select(F.col("key_old").alias("_k0")).distinct(),
-                    "_k0",
-                    "left_semi",
-                )
-                .select(F.concat(F.lit("o#"), "_k0").alias("_k"), "text")
-            )
-            new_texts = with_k.select(
-                F.concat(F.lit("n#"), "_k").alias("_k"), "text"
-            )
-            pairs = verify_pairs_jaccard(
-                cand.select(
-                    F.concat(F.lit("n#"), "key_new").alias("key_a"),
-                    F.concat(F.lit("o#"), "key_old").alias("key_b"),
-                ),
-                new_texts.unionByName(old_texts),
-                text="text",
-                key="_k",
-                threshold=args.near_dedup,
-            )
-            drop = pairs.select(
-                F.expr("substring(key_a, 3)").alias("_k")
-            ).distinct()
-            curated = with_k.join(drop, "_k", "left_anti").drop("_k")
 
     # stage metrics ride the single write pass via observe — no extra scan
     obs = Observation("curation")
@@ -1038,27 +966,23 @@ def _curate(spark, args, cfg, langs: list) -> int:
             seq = table.overwrite(curated, summary_fn=_metrics)
         summary = dict(table.manifest(seq)["summary"])
         summary["snapshot_seq"] = seq
-        if args.incremental and args.near_dedup:
-            # index the rows this run just committed (reads back only the
-            # new files, key+text pruned); a crash before this line just
-            # leaves the index one seq behind — the next run's sync heals
-            _sync_lsh_index(spark, table, SnapshotTable(os.path.join(args.output, "lsh_index")))
-        if args.incremental and args.conv_near_dedup:
-            _sync_conv_lsh_index(
-                spark, table, SnapshotTable(os.path.join(args.output, "conv_lsh_index"))
-            )
+        for idx, threshold in ((TURN_INDEX, args.near_dedup), (CONV_INDEX, args.conv_near_dedup)):
+            if args.incremental and threshold:
+                # index the rows this run just committed (reads back only
+                # the new files, key+text pruned); a crash before this
+                # line just leaves the index one seq behind — the next
+                # run's sync heals
+                _sync_index(spark, table, idx.table(args.output), idx)
         if args.compact_after and len(table.manifest()["files"]) > args.compact_after:
             # conv_id clustering keeps each file a tight key slice, so
             # forget-merges and key-pruned reads touch O(matched files);
             # the index sync's rebuild fallback absorbs the non-append
             # commit on its next run
             summary["compacted_seq"] = table.compact(spark, cluster_by=["conv_id"])
-            idx = SnapshotTable(os.path.join(args.output, "lsh_index"))
-            if idx.current_seq() is not None and len(idx.manifest()["files"]) > args.compact_after:
-                summary["compacted_index_seq"] = idx.compact(spark, cluster_by=["_k"])
-            cidx = SnapshotTable(os.path.join(args.output, "conv_lsh_index"))
-            if cidx.current_seq() is not None and len(cidx.manifest()["files"]) > args.compact_after:
-                summary["compacted_conv_index_seq"] = cidx.compact(spark, cluster_by=["conv_id"])
+            for idx in INDEXES:
+                t = idx.table(args.output)
+                if t.current_seq() is not None and len(t.manifest()["files"]) > args.compact_after:
+                    summary[f"compacted_{idx.tag}_seq"] = t.compact(spark, cluster_by=[idx.key])
     else:
         (
             curated.write.mode("overwrite")

@@ -27,9 +27,10 @@ The 100-TB compliance pattern this encodes:
    only, and the summary says so (`physically_expired: false`).
 
 A later incremental curation run handles the non-append commit
-gracefully: `_sync_lsh_index` detects that `read_changes` cannot cross a
-merge snapshot and falls back to one full index rebuild (banding only —
-one pass over the surviving corpus, no text re-extraction).
+gracefully: `jobs/curate.py _sync_index` detects that `read_changes`
+cannot cross a merge snapshot and falls back to one full index rebuild
+(banding only — one pass over the surviving corpus, no text
+re-extraction).
 """
 
 from __future__ import annotations
@@ -76,6 +77,7 @@ def _forget(spark, args, ids: list) -> int:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from jobs.curate import INDEXES, turn_key
     from table_ocr_spark.session import local_frame
     from table_ocr_spark.sources.snapshots import SnapshotTable
 
@@ -88,12 +90,8 @@ def _forget(spark, args, ids: list) -> int:
     # conv#turn and these rows are gone from the data table afterwards.
     # A forget set is small by nature (one user's conversations), so the
     # key list is driver-safe; rows_deleted rides the same collect.
-    keys = [
-        r["_k"]
-        for r in live.select(
-            F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")).alias("_k")
-        ).collect()
-    ]
+    keys = [r["_k"] for r in live.select(turn_key().alias("_k")).collect()]
+    summary = {"table": args.table, "conv_ids": len(ids), "rows_deleted": len(keys)}
 
     # duplicate turn keys are possible in the curated table (the
     # cross-increment guard anti-joins on fingerprint, not key) — a
@@ -113,14 +111,17 @@ def _forget(spark, args, ids: list) -> int:
             resume["input_seq_processed"] = h["summary"]["input_seq_processed"]
             break
 
-    summary = {"table": args.table, "conv_ids": len(ids), "rows_deleted": len(keys)}
     if keys:
-        # one conv-id frame serves the data delete and the conv-index scrub
-        conv_ids = local_frame(
-            spark, [(c,) for c in ids], T.StructType([T.StructField("conv_id", T.StringType())])
-        )
+        # one key frame per key column: the conv-id frame serves the data
+        # delete and the conv-index scrub
+        frames = {
+            col: local_frame(
+                spark, [(v,) for v in values], T.StructType([T.StructField(col, T.StringType())])
+            )
+            for col, values in (("conv_id", ids), ("_k", keys))
+        }
         seq = data.merge(
-            spark, conv_ids, ["conv_id"], when_matched="delete",
+            spark, frames["conv_id"], ["conv_id"], when_matched="delete",
             summary={"forget_conv_ids": len(ids), **resume},
         )
         summary["data_seq"] = seq
@@ -144,39 +145,28 @@ def _forget(spark, args, ids: list) -> int:
                     return {"lsh_algo": tag}
             return {}
 
-        idx = SnapshotTable(os.path.join(args.table, "lsh_index"))
-        if idx.current_seq() is not None:
-            ksrc = local_frame(
-                spark, [(k,) for k in keys], T.StructType([T.StructField("_k", T.StringType())])
-            )
-            # data_seq: after the scrub the index covers the data table
-            # exactly at the merge seq — without recording that, the next
-            # curate run's sync would see a non-append commit and rebuild
-            # the whole index it already has
-            summary["index_seq"] = idx.merge(
-                spark, ksrc, ["_k"], when_matched="delete",
-                summary={"forget_conv_ids": len(ids), "data_seq": seq,
-                         **_carried_algo_tag(idx)},
-            )
-        # the conversation-granularity index (curate --conv-near-dedup)
-        # holds one row per conv per band keyed by conv_id — scrub the
-        # forgotten convs' derived bands the same way
-        cidx = SnapshotTable(os.path.join(args.table, "conv_lsh_index"))
-        if cidx.current_seq() is not None:
-            summary["conv_index_seq"] = cidx.merge(
-                spark, conv_ids, ["conv_id"], when_matched="delete",
-                summary={"forget_conv_ids": len(ids), "data_seq": seq,
-                         **_carried_algo_tag(cidx)},
-            )
+        # each index holds rows derived from the forgotten text, keyed
+        # by turn key or conv_id — scrub them by the same key set
+        for idx in INDEXES:
+            t = idx.table(args.table)
+            if t.current_seq() is not None:
+                # data_seq: after the scrub the index covers the data
+                # table exactly at the merge seq — without recording
+                # that, the next curate run's sync would see a non-append
+                # commit and rebuild the whole index it already has
+                summary[f"{idx.tag}_seq"] = t.merge(
+                    spark, frames[idx.key], [idx.key],
+                    when_matched="delete",
+                    summary={"forget_conv_ids": len(ids), "data_seq": seq,
+                             **_carried_algo_tag(t)},
+                )
 
     if args.expire_keep > 0:
         summary["expired_data"] = data.expire(keep_last=args.expire_keep)
-        idx = SnapshotTable(os.path.join(args.table, "lsh_index"))
-        if idx.current_seq() is not None:
-            summary["expired_index"] = idx.expire(keep_last=args.expire_keep)
-        cidx = SnapshotTable(os.path.join(args.table, "conv_lsh_index"))
-        if cidx.current_seq() is not None:
-            summary["expired_conv_index"] = cidx.expire(keep_last=args.expire_keep)
+        for idx in INDEXES:
+            t = idx.table(args.table)
+            if t.current_seq() is not None:
+                summary[f"expired_{idx.tag}"] = t.expire(keep_last=args.expire_keep)
         summary["physically_expired"] = True
     else:
         summary["physically_expired"] = False

@@ -129,7 +129,7 @@ SHINGLE_B = 1000003
 # Version tag of the (token hash, combiner, permutation) triple.  Persisted
 # LSH band indexes stamp this into their commit summaries; a mismatch at
 # sync time forces a rebuild instead of silently never colliding with the
-# new buckets (jobs/curate.py _sync_lsh_index).
+# new buckets (jobs/curate.py _sync_index).
 LSH_ALGO = "mh-tokenpoly-1"
 
 

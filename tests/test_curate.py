@@ -294,16 +294,19 @@ def test_curate_near_dedup(spark, tmp_path, monkeypatch):
     fams = {k for k in plain if k[0].startswith("nd-")}
     assert len(fams) == 3  # exact dedup alone keeps all three variants
 
-    assert C.main(common + ["--output", str(tmp_path / "nd"),
-                            "--near-dedup", "0.5"]) == 0
-    nd = {(r.conv_id, r.turn_idx) for r in spark.read.parquet(
-        str(tmp_path / "nd" / "data")).select("conv_id", "turn_idx").collect()}
-    kept_fam = {k for k in nd if k[0].startswith("nd-")}
-    # one deterministic representative (min key) per near-dup family
-    assert kept_fam == {("nd-a", 0)}
-    # near-dedup only ever removes rows, and unrelated turns survive
-    assert nd < plain
-    assert len(plain - nd) < 10  # it did not nuke distinct content
+    # both candidate forms: iterated star (the default) and all-pairs
+    for mode in ("star", "pairs"):
+        out = tmp_path / f"nd-{mode}"
+        assert C.main(common + ["--output", str(out), "--near-dedup", "0.5",
+                                "--near-dedup-mode", mode]) == 0
+        nd = {(r.conv_id, r.turn_idx) for r in spark.read.parquet(
+            str(out / "data")).select("conv_id", "turn_idx").collect()}
+        kept_fam = {k for k in nd if k[0].startswith("nd-")}
+        # one deterministic representative (min key) per near-dup family
+        assert kept_fam == {("nd-a", 0)}
+        # near-dedup only ever removes rows, and unrelated turns survive
+        assert nd < plain
+        assert len(plain - nd) < 10  # it did not nuke distinct content
 
 
 def test_curate_conv_near_dedup_drops_edited_reupload_whole(spark, tmp_path, monkeypatch):
@@ -437,7 +440,7 @@ def test_curate_incremental_conv_near_dedup_against_history(spark, tmp_path, mon
     assert covered == out_table.current_seq()
     # sync is idempotent
     n = len(cidx_table.history())
-    C._sync_conv_lsh_index(spark, out_table, cidx_table)
+    C._sync_index(spark, out_table, cidx_table, C.CONV_INDEX)
     assert len(cidx_table.history()) == n
 
 
@@ -536,7 +539,7 @@ def test_curate_incremental_concurrent_writer_aborts_cleanly(spark, tmp_path, mo
     assert on_disk == n_files_all_seqs  # nothing unreferenced, nothing missing
 
     # index healed: B never synced it; the next sync covers B's commit
-    C._sync_lsh_index(spark, out_table, idx_table)
+    C._sync_index(spark, out_table, idx_table, C.TURN_INDEX)
     covered = max(
         int(h["summary"]["data_seq"])
         for h in idx_table.history() if "data_seq" in h["summary"]
@@ -694,7 +697,7 @@ def test_curate_incremental_near_dedup_against_history(spark, tmp_path, monkeypa
     assert idx_table.read(spark).count() > idx_rows_1
     # sync is idempotent: already-covered → no new index commit
     n_commits = len(idx_table.history())
-    C._sync_lsh_index(spark, out_table, idx_table)
+    C._sync_index(spark, out_table, idx_table, C.TURN_INDEX)
     assert len(idx_table.history()) == n_commits
 
     # hash-algorithm drift: an index banded under a different (or legacy
@@ -707,7 +710,7 @@ def test_curate_incremental_near_dedup_against_history(spark, tmp_path, monkeypa
         summary={"data_seq": out_table.current_seq(), "lsh_algo": "legacy-0"},
     )
     live_keys = out_table.read(spark).count()
-    C._sync_lsh_index(spark, out_table, idx_table)
+    C._sync_index(spark, out_table, idx_table, C.TURN_INDEX)
     h = idx_table.history()[-1]
     assert h["operation"] == "overwrite"
     assert h["summary"]["lsh_algo"] == LSH_ALGO
@@ -833,7 +836,9 @@ def test_curate_compact_after_keeps_incremental_loop_working(spark, tmp_path, mo
     assert {r._k for r in idx.read(spark).select("_k").distinct().collect()} == live_keys
 
 
-def test_curate_incremental_reingest_rewritten_turn_not_self_dropped(spark, tmp_path, monkeypatch):
+def test_curate_incremental_reingest_rewritten_turn_not_self_dropped(
+    spark, tmp_path, monkeypatch, capsys
+):
     """A (conv_id, turn_idx) key re-appended in a later increment with
     text that does NOT clear the near-dup threshold against its OLD
     version must be kept: the verify compares new text vs old text, not
@@ -885,6 +890,16 @@ def test_curate_incremental_reingest_rewritten_turn_not_self_dropped(spark, tmp_
     # both versions live (different fingerprints, similarity below J):
     # the rewritten re-ingest was NOT self-dropped
     assert ri.count() == 2
+
+    # forgetting the conversation deletes both rows of its duplicated
+    # turn key, and the summary counts rows, not distinct keys
+    import jobs.forget as FG
+
+    capsys.readouterr()
+    assert FG.main(["--table", str(tmp_path / "out"), "--conv-ids", "ri-conv"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["rows_deleted"] == 2
+    assert out.read(spark).filter(F.col("conv_id") == "ri-conv").count() == 0
 
 
 def test_curate_strip_corpus_min_df(spark, tmp_path, monkeypatch):
@@ -1027,7 +1042,7 @@ def test_conv_index_compact_only_catchup_is_metadata_only(spark, tmp_path, monke
         ("ca", 0, "user", "alpha beta gamma delta", "", t0),
         ("cb", 0, "user", "one two three four", "", t0),
     ]))
-    C._sync_conv_lsh_index(spark, out_table, cidx)
+    C._sync_index(spark, out_table, cidx, C.CONV_INDEX)
     n_before = cidx.read(spark).count()
     assert n_before  # bootstrap banded the live set
 
@@ -1039,7 +1054,7 @@ def test_conv_index_compact_only_catchup_is_metadata_only(spark, tmp_path, monke
     def _no_index_read(*a, **kw):
         raise AssertionError("compact-only catch-up must not read the index")
     monkeypatch.setattr(cidx, "read", _no_index_read)
-    C._sync_conv_lsh_index(spark, out_table, cidx)
+    C._sync_index(spark, out_table, cidx, C.CONV_INDEX)
     monkeypatch.setattr(cidx, "read", real_read)
 
     # zero rows appended, covered seq advanced (idempotent next sync)
@@ -1079,7 +1094,7 @@ def test_conv_index_catchup_rebands_convs_grown_in_uncovered_range(spark, tmp_pa
         ("cgrow", 1, "assistant", "epsilon zeta eta theta", "", t0),
         ("cother", 0, "user", "one two three four", "", t0),
     ]))
-    C._sync_conv_lsh_index(spark, out_table, cidx)
+    C._sync_index(spark, out_table, cidx, C.CONV_INDEX)
     gen1 = {(r.band, r.bucket) for r in cidx.read(spark)
             .filter("conv_id = 'cgrow'").collect()}
     assert gen1  # bootstrap banded the short text
@@ -1091,7 +1106,7 @@ def test_conv_index_catchup_rebands_convs_grown_in_uncovered_range(spark, tmp_pa
         ("cgrow", 3, "assistant", "rho sigma tau upsilon phi chi psi", "", t0),
     ]))
     out_table.compact(spark)
-    C._sync_conv_lsh_index(spark, out_table, cidx)
+    C._sync_index(spark, out_table, cidx, C.CONV_INDEX)
 
     # expected: the bands of the FULL grown text are now present
     full = lsh_banded(
@@ -1107,5 +1122,5 @@ def test_conv_index_catchup_rebands_convs_grown_in_uncovered_range(spark, tmp_pa
     assert gen1 <= have
     # idempotent: a second sync appends nothing
     n = cidx.read(spark).count()
-    C._sync_conv_lsh_index(spark, out_table, cidx)
+    C._sync_index(spark, out_table, cidx, C.CONV_INDEX)
     assert cidx.read(spark).count() == n

@@ -1,7 +1,7 @@
 """Right-to-be-forgotten job: conversations removed from the curated
 table AND its LSH-index sidecar as atomic commits; later incremental
 curation survives the non-append commit via index rebuild
-(jobs/forget.py, jobs/curate.py _sync_lsh_index)."""
+(jobs/forget.py, jobs/curate.py _sync_index)."""
 
 import json
 
@@ -150,12 +150,55 @@ def test_forget_carries_legacy_algo_tag_so_sync_still_rebuilds(spark, tmp_path, 
     # and the next sync treats the index as legacy: full rebuild
     out_table = data
     n_hist = len(idx.history())
-    C._sync_lsh_index(spark, out_table, idx)
+    C._sync_index(spark, out_table, idx, C.TURN_INDEX)
     newest2 = idx.manifest(idx.current_seq())
     assert len(idx.history()) == n_hist + 1
     assert newest2["operation"] == "overwrite"
     from table_ocr_spark.operators.dedup import LSH_ALGO
     assert newest2["summary"]["lsh_algo"] == LSH_ALGO
+
+
+def test_both_indexes_compact_scrub_and_expire(spark, tmp_path, monkeypatch, capsys):
+    """Turn and conversation LSH indexes through one incremental
+    lifecycle: two increments with both near-dedup levels compact the
+    table and BOTH indexes; forget with --expire-keep scrubs and expires
+    both, and the forgotten conversation is gone from every live table."""
+    from table_ocr_spark import session as session_mod
+    from table_ocr_spark import synth
+    from table_ocr_spark.sources.snapshots import SnapshotTable
+
+    import jobs.curate as C
+    import jobs.forget as FG
+
+    monkeypatch.setattr(session_mod, "build_session", lambda **kw: spark)
+
+    in_table = SnapshotTable(str(tmp_path / "in"))
+    out = tmp_path / "out"
+    args = ["--input", str(tmp_path / "in"), "--output", str(out),
+            "--min-quality", "0.0", "--input-snapshot", "--incremental",
+            "--snapshot", "--near-dedup", "0.5", "--conv-near-dedup", "0.6",
+            "--compact-after", "1"]
+    for seed in (64, 68):
+        in_table.append(_tx(spark, synth.gen_pandas(4, seed=seed, max_long=20)))
+        assert C.main(args) == 0
+    summary = json.loads((out / "_curation_summary.json").read_text())
+    assert "compacted_index_seq" in summary
+    assert "compacted_conv_index_seq" in summary
+
+    data = SnapshotTable(str(out / "table"))
+    idx = SnapshotTable(str(out / "lsh_index"))
+    cidx = SnapshotTable(str(out / "conv_lsh_index"))
+    victim = data.read(spark).select("conv_id").first().conv_id
+    assert cidx.read(spark).filter(F.col("conv_id") == victim).count() > 0
+
+    capsys.readouterr()
+    assert FG.main(["--table", str(out), "--conv-ids", victim, "--expire-keep", "1"]) == 0
+    forgot = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    for k in ("index_seq", "conv_index_seq", "expired_index", "expired_conv_index"):
+        assert k in forgot, (k, forgot)
+    assert data.read(spark).filter(F.col("conv_id") == victim).count() == 0
+    assert idx.read(spark).filter(F.col("_k").startswith(victim + "#")).count() == 0
+    assert cidx.read(spark).filter(F.col("conv_id") == victim).count() == 0
 
 
 def test_jobs_borrow_a_running_session(spark, tmp_path):

@@ -446,3 +446,39 @@ def test_session_lifecycle_calls_only_in_session_helpers():
 
         walk(ast.parse(path.read_text()), None)
     assert not bad, bad
+
+
+def test_lsh_index_layout_only_in_index_descriptions():
+    """The LSH index sidecars' directory names live only in
+    ``jobs/curate.py`` (the ``LshIndex`` descriptions), and the composite
+    turn-key expression only in its ``turn_key``: every sync,
+    dedup-against-history, compaction, scrub and expiry goes through
+    them, so a change to the on-disk layout or the key format cannot miss
+    a copy."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    owner = root / "jobs" / "curate.py"
+    bad = []
+    for path in sorted([*root.glob("table_ocr_spark/**/*.py"), *root.glob("jobs/*.py")]):
+
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    walk(child, child.name)
+                    continue
+                if isinstance(child, ast.Constant) and path != owner \
+                        and child.value in ("lsh_index", "conv_lsh_index"):
+                    bad.append(f"{path.relative_to(root)}:{child.lineno} {child.value!r}")
+                f = getattr(child, "func", None)
+                if isinstance(child, ast.Call) and isinstance(f, ast.Attribute) \
+                        and f.attr == "concat_ws" and child.args \
+                        and isinstance(child.args[0], ast.Constant) \
+                        and child.args[0].value == "#" \
+                        and not (path == owner and fn == "turn_key"):
+                    bad.append(f"{path.relative_to(root)}:{child.lineno} concat_ws('#', ...)")
+                walk(child, fn)
+
+        walk(ast.parse(path.read_text()), None)
+    assert not bad, bad
